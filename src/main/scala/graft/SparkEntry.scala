@@ -4,12 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.ExactMath
 import graft.operators.{Analysis, DataOps, GraphOps, KgOps, Relational}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every implemented operator from SURVEY.md §2 has an entry in
-  * [[queries]]; SQL-expressible ones also have a DuckDB oracle in
-  * [[oracleSql]] (column names aligned exactly — the driver hashes
-  * values after sorting columns by name).
+/** One registered query: its Spark implementation over an sf table
+  * directory, and the equivalent ANSI SQL that DuckDB runs over the same
+  * parquet tables as its oracle (column names aligned exactly — the
+  * driver hashes values after sorting columns by name).
+  */
+final case class QuerySpec(name: String,
+                           run: (SparkSession, String) => DataFrame,
+                           oracle: String)
+
+/** Driver contract (SURVEY.md §7): the query registry [[specs]], one
+  * [[QuerySpec]] per implemented operator from SURVEY.md §2, and the two
+  * name-keyed views derived from it.
   */
 object SparkEntry {
 
@@ -17,165 +23,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (Relational.q1PricingSummary _),
-    "q2_join_agg" -> (Relational.q2RevenueByNation _),
-    "q3_filter_topk" -> (Relational.q3TopOrders _),
-    "q4_semijoin" -> (Relational.q4SemiJoin _),
-    "q5_antijoin" -> (Relational.q5AntiJoin _),
-    "q6_window_top1" -> (Relational.q6WindowTopOrder _),
-    "q7_explode_onetomany" -> (Relational.q7ExplodeTokens _),
-    "q8_distinct" -> (Relational.q8Distinct _),
-    "q9_range_join" -> (Relational.q9RangeJoin _),
-    "q40_interval_buckets" -> (Relational.q40IntervalBuckets _),
-    "q10_string_preds" -> (Relational.q10StringPredicates _),
-    "q11_ignorecase_join" -> (Relational.q11IgnoreCaseJoin _),
-    "q12_twohop_closure" -> (Relational.q12TwoHop _),
-    "q13_graph_upsert" -> (GraphOps.q13GraphUpsert _),
-    "q14_graph_cleanup" -> (GraphOps.q14GraphCleanup _),
-    "q15_drift" -> (GraphOps.q15Drift _),
-    "q16_khop" -> (Analysis.q16KHop _),
-    "q17_wildcard_policy" -> (Analysis.q17Wildcard _),
-    "q18_collect_agg" -> (Analysis.q18Collect _),
-    "q19_json_props" -> (Analysis.q19Json _),
-    "q20_exposure_propagation" -> (Analysis.q20Exposure _),
-    "q21_lineage" -> (Analysis.q21Lineage _),
-    "q22_suffix_subzones" -> (Analysis.q22Subzones _),
-    "q23_array_any" -> (Analysis.q23ArrayAny _),
-    "q24_incremental_sync" -> (GraphOps.q24IncrementalSync _),
-    "q34_time_travel" -> (GraphOps.q34TimeTravel _),
-    "q39_changelog" -> (GraphOps.q39Changelog _),
-    "q25_clear_props" -> (GraphOps.q25ClearProps _),
-    "q26_analysis_job" -> (GraphOps.q26AnalysisJob _),
-    "q42_shipped_jobs" -> (GraphOps.q42ShippedJobs _),
-    "q27_drift_states" -> (GraphOps.q27DriftStates _),
-    "q28_selected_rels" -> (GraphOps.q28SelectedRels _),
-    "q30_multi_tenant" -> (GraphOps.q30MultiTenant _),
-    "q31_indexed_cleanup" -> (GraphOps.q31IndexedCleanup _),
-    "q33_policy_file" -> (Analysis.q33PolicyFile _),
-    "qkg1_extract_invariant" -> (KgOps.qkg1Invariant _),
-    "qkg2_mentions" -> (KgOps.qkg2Mentions _),
-    "qkg3_triples" -> (KgOps.qkg3Triples _),
-    "qkg4_canonical" -> (KgOps.qkg4Canonical _),
-    "qkg5_mention_degree" -> (KgOps.qkg5Degree _),
-    "qkg6_graph_edges" -> (KgOps.qkg6GraphEdges _),
-    "qkg7_comention" -> (KgOps.qkg7Comention _),
-    "qkg8_salted_degree" -> (KgOps.qkg8SaltedDegree _),
-    "qkg9_triangles" -> (KgOps.qkg9Triangles _),
-    "qkg10_pagerank" -> (KgOps.qkg10PageRank _),
-    "qkg11_pagerank_salted" -> (KgOps.qkg11PageRankSalted _),
-    "qkg12_components" -> (KgOps.qkg12Components _),
-    "qkg13_ppr" -> (KgOps.qkg13Ppr _),
-    "qkg14_hits" -> (KgOps.qkg14Hits _),
-    "qkg15_bfs" -> (KgOps.qkg15Bfs _),
-    "qkg19_sssp" -> (KgOps.qkg19Sssp _),
-    "qkg20_walks" -> (KgOps.qkg20Walks _),
-    "qkg21_degree_hist" -> (KgOps.qkg21DegreeHist _),
-    "qkg22_hyperball" -> (KgOps.qkg22HyperBall _),
-    "qkg24_harmonic" -> (KgOps.qkg24Harmonic _),
-    "qkg16_related" -> (KgOps.qkg16Related _),
-    "qkg23_adamic_adar" -> (KgOps.qkg23AdamicAdar _),
-    "qkg17_labelprop" -> (KgOps.qkg17LabelProp _),
-    "qkg18_kcore" -> (KgOps.qkg18KCore _),
-    "q29_streaming_sync" -> (KgOps.q29StreamingSync _),
-    "q32_stream_windows" -> (KgOps.q32StreamWindows _),
-    "q35_stream_sessions" -> (KgOps.q35StreamSessions _),
-    "q36_stream_enrich" -> (KgOps.q36StreamEnrich _),
-    "q37_stream_dedup_ttl" -> (KgOps.q37StreamDedupTtl _),
-    "q38_stream_join" -> (KgOps.q38StreamJoin _),
-    "q41_stream_left_join" -> (KgOps.q41StreamLeftJoin _),
-    "qdd1_exact_dedup" -> (DataOps.qdd1ExactDedup _),
-    "qdc1_contamination" -> (DataOps.qdc1Contamination _),
-    "qdc2_decontaminate" -> (DataOps.qdc2Decontaminate _),
-    "qdd2_neardup_allpairs" -> (DataOps.qdd2NearDupAllPairs _),
-    "qdd3_dedup_clusters" -> (DataOps.qdd3DedupClusters _),
-    "qdd4_minhash_lsh" -> (DataOps.qdd4MinhashLsh _),
-    "qdd5_simhash" -> (DataOps.qdd5Simhash _),
-    "qdd6_cdc_pairs" -> (DataOps.qdd6CdcPairs _),
-    "qdd7_keep_best" -> (DataOps.qdd7KeepBest _),
-    "qsp5_negatives" -> (DataOps.qsp5Negatives _),
-    "qev1_sessionize" -> (DataOps.qev1Sessionize _),
-    "qev2_retention" -> (DataOps.qev2Retention _),
-    "qev3_funnel" -> (DataOps.qev3Funnel _),
-    "qev4_quantiles" -> (DataOps.qev4Quantiles _),
-    "qev5_asof" -> (DataOps.qev5Asof _),
-    "qev6_rolling_active" -> (DataOps.qev6RollingActive _),
-    "qev7_locf" -> (DataOps.qev7Locf _),
-    "qev8_transitions" -> (DataOps.qev8Transitions _),
-    "qev9_scd2" -> (DataOps.qev9Scd2 _),
-    "qev10_rfm" -> (DataOps.qev10Rfm _),
-    "qev11_time_to_convert" -> (DataOps.qev11TimeToConvert _),
-    "qsp7_epoch_order" -> (DataOps.qsp7EpochOrder _),
-    "qsp8_token_budget" -> (DataOps.qsp8TokenBudget _),
-    "qsk8_hll_by_type" -> (DataOps.qsk8HllByType _),
-    "qsk9_hll_overlap" -> (DataOps.qsk9HllOverlap _),
-    "qkg25_community_graph" -> (KgOps.qkg25CommunityGraph _),
-    "qsp4_splits" -> (DataOps.qsp4Splits _),
-    "qsk1_hll_registers" -> (DataOps.qsk1HllRegisters _),
-    "qsk2_cms_counters" -> (DataOps.qsk2CmsCounters _),
-    "qsk3_cms_estimates" -> (DataOps.qsk3CmsEstimates _),
-    "qsk4_bloom_bits" -> (DataOps.qsk4BloomBits _),
-    "qsk6_hll_merge" -> (DataOps.qsk6HllMerge _),
-    "qsk7_histogram" -> (DataOps.qsk7Histogram _),
-    "qsp6_weighted_sample" -> (DataOps.qsp6WeightedSample _),
-    "qsk5_bloom_semijoin" -> (DataOps.qsk5BloomSemijoin _),
-    "qtx1_tokens" -> (DataOps.qtx1Tokens _),
-    "qtx2_quality" -> (DataOps.qtx2Quality _),
-    "qtx3_langid" -> (DataOps.qtx3LangId _),
-    "qtx4_fingerprint" -> (DataOps.qtx4Fingerprint _),
-    "qtx5_rabin" -> (DataOps.qtx5Rabin _),
-    "qtx6_chunks" -> (DataOps.qtx6Chunks _),
-    "qtx7_redact" -> (DataOps.qtx7Redact _),
-    "qtx8_bigram_support" -> (DataOps.qtx8BigramSupport _),
-    "qtx9_distinctive_terms" -> (DataOps.qtx9DistinctiveTerms _),
-    "qtx11_repetition" -> (DataOps.qtx11Repetition _),
-    "qtx12_postings" -> (DataOps.qtx12Postings _),
-    "qtx10_url_canon" -> (DataOps.qtx10UrlCanon _),
-    "qtx17_segment_dedup" -> (DataOps.qtx17SegmentDedup _),
-    "qtx18_bpe_merges" -> (DataOps.qtx18BpeMerges _),
-    "qtx19_vocab_growth" -> (DataOps.qtx19VocabGrowth _),
-    "qtx20_source_profile" -> (DataOps.qtx20SourceProfile _),
-    "qtx21_novelty" -> (DataOps.qtx21Novelty _),
-    "qkg26_squares" -> (KgOps.qkg26Squares _),
-    "qkg27_katz" -> (KgOps.qkg27Katz _),
-    "qtx13_df_prune" -> (DataOps.qtx13DfPrune _),
-    "qtx14_bm25" -> (DataOps.qtx14Bm25 _),
-    "qtx15_lm_score" -> (DataOps.qtx15LmScore _),
-    "qtx16_skipgram_ppmi" -> (DataOps.qtx16SkipgramPpmi _),
-    "qsp1_hash_sample" -> (DataOps.qsp1HashSample _),
-    "qsp2_stratified" -> (DataOps.qsp2Stratified _),
-    "qsp3_mix_rates" -> (DataOps.qsp3MixRates _),
-    "qann1_topk" -> (DataOps.qann1TopK _),
-    "qann2_pairs_above" -> (DataOps.qann2PairsAbove _),
-    "qann9_filtered_topk" -> (DataOps.qann9FilteredTopK _),
-    "qann3_lsh_topk" -> (DataOps.qann3LshTopK _),
-    "qann4_ivf_topk" -> (DataOps.qann4IvfTopK _),
-    "qann6_pq_codes" -> (DataOps.qann6PqCodes _),
-    "qann7_adc_topk" -> (DataOps.qann7AdcTopK _),
-    "qann8_ivfpq" -> (DataOps.qann8IvfPq _),
-    "qann5_embed_clusters" -> (DataOps.qann5EmbedClusters _),
-    "qmm1_media_meta" -> (DataOps.qmm1MediaMeta _),
-    "qmm2_image_dims" -> (DataOps.qmm2ImageDims _),
-    "qmm3_wav_meta" -> (DataOps.qmm3WavMeta _),
-    "qmm4_media_dispatch" -> (DataOps.qmm4MediaDispatch _),
-    "qmm5_image_neardup" -> (DataOps.qmm5ImageNearDup _),
-    "qmm6_image_clusters" -> (DataOps.qmm6ImageClusters _),
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** The query registry. Shared oracle CTEs below are `def`s, so this
+    * table may refer to them before their declaration.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_agg", Relational.q1PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
         | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
         | COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q2_join_agg" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    QuerySpec("q2_join_agg", Relational.q2RevenueByNation,
       """SELECT n_name,
         | CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         | COUNT(*) AS n_lines
@@ -183,79 +43,79 @@ object SparkEntry {
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q3_filter_topk" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    QuerySpec("q3_filter_topk", Relational.q3TopOrders,
       """SELECT o_orderkey, o_custkey,
         | CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |ORDER BY total_price DESC, o_orderkey LIMIT 30""".stripMargin,
-    "q4_semijoin" ->
+        |ORDER BY total_price DESC, o_orderkey LIMIT 30""".stripMargin),
+    QuerySpec("q4_semijoin", Relational.q4SemiJoin,
       """SELECT c_mktsegment, COUNT(*) AS n_customers
         |FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q5_antijoin" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QuerySpec("q5_antijoin", Relational.q5AntiJoin,
       """SELECT n_name, COUNT(*) AS n_orphans
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate >= TIMESTAMP '1998-01-01')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q6_window_top1" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    QuerySpec("q6_window_top1", Relational.q6WindowTopOrder,
       """SELECT o_custkey, top_orderkey, top_price FROM (
         | SELECT o_custkey, o_orderkey AS top_orderkey,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS top_price,
         |  ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        | FROM orders) t WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "q7_explode_onetomany" ->
+        | FROM orders) t WHERE rn = 1 ORDER BY o_custkey""".stripMargin),
+    QuerySpec("q7_explode_onetomany", Relational.q7ExplodeTokens,
       """SELECT type_token, COUNT(*) AS n_parts FROM (
         | SELECT unnest(string_split(p_type, ' ')) AS type_token FROM part) t
-        |GROUP BY type_token ORDER BY type_token""".stripMargin,
-    "q8_distinct" ->
+        |GROUP BY type_token ORDER BY type_token""".stripMargin),
+    QuerySpec("q8_distinct", Relational.q8Distinct,
       """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    "q9_range_join" ->
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin),
+    QuerySpec("q9_range_join", Relational.q9RangeJoin,
       """WITH bands(band, lo, hi) AS (
         | VALUES ('b0_low', 0.0, 15.0), ('b1_mid', 15.0, 35.0),
         |        ('b2_high', 35.0, 70.0), ('b3_tail', 70.0, 150.0),
         |        ('b4_extreme', 150.0, 1e18))
         |SELECT band, COUNT(*) AS n_events
         |FROM events JOIN bands ON value >= lo AND value < hi
-        |GROUP BY band ORDER BY band""".stripMargin,
+        |GROUP BY band ORDER BY band""".stripMargin),
     // q40: bucketed interval join — the oracle is the PLAIN range join
     // (bucketing + replication + exact re-check is transparent)
-    "q40_interval_buckets" ->
+    QuerySpec("q40_interval_buckets", Relational.q40IntervalBuckets,
       """WITH b AS (SELECT n_name AS band,
         |        n_nationkey * CAST(0.75 AS DOUBLE) AS lo,
         |        n_nationkey * CAST(0.75 AS DOUBLE) + CAST(1.5 AS DOUBLE) AS hi
         |       FROM nation)
         |SELECT band, lo, hi, COUNT(*) AS n_events
         |FROM events JOIN b ON value >= lo AND value < hi
-        |GROUP BY 1, 2, 3 ORDER BY band""".stripMargin,
-    "q10_string_preds" ->
+        |GROUP BY 1, 2, 3 ORDER BY band""".stripMargin),
+    QuerySpec("q10_string_preds", Relational.q10StringPredicates,
       """SELECT
         | COUNT(CASE WHEN p_name LIKE 'a%' THEN 1 END) AS n_starts_a,
         | COUNT(CASE WHEN p_name LIKE '%e' THEN 1 END) AS n_ends_e,
         | COUNT(CASE WHEN p_name LIKE '%red%' THEN 1 END) AS n_contains_red,
         | COUNT(CASE WHEN LENGTH(p_name) > 20 THEN 1 END) AS n_long
-        |FROM part""".stripMargin,
-    "q11_ignorecase_join" ->
+        |FROM part""".stripMargin),
+    QuerySpec("q11_ignorecase_join", Relational.q11IgnoreCaseJoin,
       """SELECT n.n_name AS n_name, d.dim_key AS dim_key
         |FROM nation n
         |JOIN (SELECT UPPER(n_name) AS dim_name, n_nationkey AS dim_key FROM nation) d
         | ON LOWER(n.n_name) = LOWER(d.dim_name)
-        |ORDER BY n_name""".stripMargin,
-    "q12_twohop_closure" ->
+        |ORDER BY n_name""".stripMargin),
+    QuerySpec("q12_twohop_closure", Relational.q12TwoHop,
       """SELECT o_custkey, COUNT(DISTINCT l_partkey) AS n_parts
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_custkey ORDER BY n_parts DESC, o_custkey LIMIT 30""".stripMargin,
-    "q16_khop" ->
+        |GROUP BY o_custkey ORDER BY n_parts DESC, o_custkey LIMIT 30""".stripMargin),
+    QuerySpec("q16_khop", Analysis.q16KHop,
       """SELECT 1 AS hop, COUNT(DISTINCT c_custkey) AS n_nodes
         |FROM customer WHERE c_nationkey = 1
         |UNION ALL
         |SELECT 2, COUNT(DISTINCT o_orderkey)
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE c_nationkey = 1
-        |ORDER BY hop""".stripMargin,
-    "q17_wildcard_policy" ->
+        |ORDER BY hop""".stripMargin),
+    QuerySpec("q17_wildcard_policy", Analysis.q17Wildcard,
       s"""${Analysis.policyCte}
          |SELECT policy_id, COUNT(*) AS n_allowed FROM (
          | SELECT policy_id, p_partkey,
@@ -264,11 +124,11 @@ object SparkEntry {
          | FROM part JOIN pats ON p_name LIKE pattern
          | GROUP BY policy_id, p_partkey) t
          |WHERE a = 1 AND d = 0
-         |GROUP BY policy_id ORDER BY policy_id""".stripMargin,
+         |GROUP BY policy_id ORDER BY policy_id""".stripMargin),
     // q33 loads the SAME policy set through the mapping-file round-trip
     // (serialize → loadPolicyMapping → evaluate), so its expected answer
     // is exactly q17's.
-    "q33_policy_file" ->
+    QuerySpec("q33_policy_file", Analysis.q33PolicyFile,
       s"""${Analysis.policyCte}
          |SELECT policy_id, COUNT(*) AS n_allowed FROM (
          | SELECT policy_id, p_partkey,
@@ -277,18 +137,18 @@ object SparkEntry {
          | FROM part JOIN pats ON p_name LIKE pattern
          | GROUP BY policy_id, p_partkey) t
          |WHERE a = 1 AND d = 0
-         |GROUP BY policy_id ORDER BY policy_id""".stripMargin,
-    "q18_collect_agg" ->
+         |GROUP BY policy_id ORDER BY policy_id""".stripMargin),
+    QuerySpec("q18_collect_agg", Analysis.q18Collect,
       """SELECT o_custkey,
         | string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities,
         | COUNT(*) AS n_orders
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey LIMIT 100""".stripMargin,
-    "q19_json_props" ->
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey LIMIT 100""".stripMargin),
+    QuerySpec("q19_json_props", Analysis.q19Json,
       """SELECT k % 10 AS k_mod, COUNT(*) AS n_events, CAST(SUM(k) AS BIGINT) AS sum_k
         |FROM (SELECT CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS k
         |      FROM events) t
-        |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q20_exposure_propagation" ->
+        |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin),
+    QuerySpec("q20_exposure_propagation", Analysis.q20Exposure,
       """WITH tagged AS (
         | SELECT s_suppkey, tag FROM supplier
         | JOIN nation ON s_nationkey = n_nationkey
@@ -304,8 +164,8 @@ object SparkEntry {
         | SELECT l_partkey, string_agg(DISTINCT tag, ',' ORDER BY tag) AS exposure
         | FROM pt GROUP BY l_partkey)
         |SELECT exposure, COUNT(*) AS n_parts FROM pe
-        |GROUP BY exposure ORDER BY exposure""".stripMargin,
-    "q21_lineage" ->
+        |GROUP BY exposure ORDER BY exposure""".stripMargin),
+    QuerySpec("q21_lineage", Analysis.q21Lineage,
       """WITH en AS (SELECT doc_id AS i FROM documents WHERE lang = 'en'),
         |tot AS (SELECT COUNT(*) AS n FROM documents)
         |SELECT stage, total_rows FROM (
@@ -318,8 +178,8 @@ object SparkEntry {
         |      + CASE WHEN i % 10 = 9 THEN 1 ELSE 0 END), 0) AS BIGINT) FROM en)
         | UNION ALL SELECT 'pages', n FROM tot
         | UNION ALL SELECT 'triples', (SELECT COUNT(*) FROM en)) t
-        |ORDER BY stage""".stripMargin,
-    "q22_suffix_subzones" ->
+        |ORDER BY stage""".stripMargin),
+    QuerySpec("q22_suffix_subzones", Analysis.q22Subzones,
       """WITH d AS (SELECT DISTINCT doc_id % 50 AS m, doc_id % 3 AS j
         |           FROM documents),
         |zones AS (
@@ -328,75 +188,75 @@ object SparkEntry {
         | UNION SELECT 'd' || CAST(j AS VARCHAR) || '.host' || CAST(m AS VARCHAR) || '.example' FROM d)
         |SELECT p.zone AS zone, COUNT(*) AS n_subzones
         |FROM zones c JOIN zones p ON c.zone LIKE '%.' || p.zone
-        |GROUP BY p.zone ORDER BY zone""".stripMargin,
+        |GROUP BY p.zone ORDER BY zone""".stripMargin),
     // Oracles below recompute the EXPECTED graph state after the
     // upsert/cleanup/drift scenario that the Spark side actually executes
     // through GraphMerge/Cleanup/SnapshotTable.
-    "q13_graph_upsert" ->
+    QuerySpec("q13_graph_upsert", GraphOps.q13GraphUpsert,
       """SELECT CAST(c_custkey AS VARCHAR) AS id,
         | CAST(CASE WHEN c_custkey % 2 = 0 THEN 100 ELSE 200 END AS BIGINT) AS firstseen,
         | CAST(200 AS BIGINT) AS lastupdated,
         | c_mktsegment AS segment
-        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin,
-    "q14_graph_cleanup" ->
+        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin),
+    QuerySpec("q14_graph_cleanup", GraphOps.q14GraphCleanup,
       """SELECT CAST(c_custkey AS VARCHAR) AS id,
         | CAST(100 AS BIGINT) AS firstseen, CAST(200 AS BIGINT) AS lastupdated,
         | CAST(1 AS BIGINT) AS n_res_edges
         |FROM customer WHERE c_nationkey = 1 AND c_custkey % 2 = 0
-        |ORDER BY id""".stripMargin,
-    "q15_drift" ->
+        |ORDER BY id""".stripMargin),
+    QuerySpec("q15_drift", GraphOps.q15Drift,
       """WITH c AS (SELECT c_custkey AS k, CAST(c_custkey AS VARCHAR) AS id
         |           FROM customer WHERE c_nationkey = 1)
         |SELECT id, 'added' AS direction FROM c WHERE k % 3 = 0 AND k % 2 <> 0
         |UNION ALL
         |SELECT id, 'removed' AS direction FROM c WHERE k % 2 = 0 AND k % 3 <> 0
-        |ORDER BY direction, id""".stripMargin,
+        |ORDER BY direction, id""".stripMargin),
     // KG-pipeline oracles: recompute planted facts arithmetically from
     // documents.parquet; the Spark side must reproduce them through real
     // HTML extraction, Aho-Corasick mention detection, LSH blocking, CC
     // canonicalization and graph merge.
-    "qkg1_extract_invariant" ->
-      "SELECT COUNT(*) AS n_pages, COUNT(*) AS n_exact FROM documents",
-    "qkg2_mentions" ->
+    QuerySpec("qkg1_extract_invariant", KgOps.qkg1Invariant,
+      "SELECT COUNT(*) AS n_pages, COUNT(*) AS n_exact FROM documents"),
+    QuerySpec("qkg2_mentions", KgOps.qkg2Mentions,
       s"""${KgOps.mentionCte}
          |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS url,
          | 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
          | COUNT(*) AS n_mentions
-         |FROM c GROUP BY 1, 2 ORDER BY url, entity_id""".stripMargin,
-    "qkg3_triples" ->
+         |FROM c GROUP BY 1, 2 ORDER BY url, entity_id""".stripMargin),
+    QuerySpec("qkg3_triples", KgOps.qkg3Triples,
       s"""${KgOps.tripleCte}
          |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS url,
          | 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS subj,
          | ${KgOps.predCase} AS pred,
          | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS obj
-         |FROM cz ORDER BY url, subj, pred, obj""".stripMargin,
-    "qkg4_canonical" ->
+         |FROM cz ORDER BY url, subj, pred, obj""".stripMargin),
+    QuerySpec("qkg4_canonical", KgOps.qkg4Canonical,
       """SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS entity_id,
         | 'e' || lpad(CAST(CASE WHEN k >= 800 THEN k - 800 ELSE k END AS VARCHAR), 4, '0') AS canonical_id
-        |FROM range(0, 1000) t(k) ORDER BY entity_id""".stripMargin,
-    "qkg5_mention_degree" ->
+        |FROM range(0, 1000) t(k) ORDER BY entity_id""".stripMargin),
+    QuerySpec("qkg5_mention_degree", KgOps.qkg5Degree,
       s"""${KgOps.mentionCte}
          |SELECT 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
          | COUNT(*) AS n_mentions
-         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin,
-    "qkg6_graph_edges" ->
+         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin),
+    QuerySpec("qkg6_graph_edges", KgOps.qkg6GraphEdges,
       s"""${KgOps.tripleCte}
          |SELECT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src_id,
          | ${KgOps.predCase} AS rel_label,
          | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst_id,
          | COUNT(DISTINCT i) AS n_sources,
          | CAST(100 AS BIGINT) AS firstseen, CAST(100 AS BIGINT) AS lastupdated
-         |FROM cz GROUP BY 1, 2, 3 ORDER BY src_id, rel_label, dst_id""".stripMargin,
-    "q29_streaming_sync" ->
+         |FROM cz GROUP BY 1, 2, 3 ORDER BY src_id, rel_label, dst_id""".stripMargin),
+    QuerySpec("q29_streaming_sync", KgOps.q29StreamingSync,
       s"""${KgOps.tripleCte}
          |SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src_id,
          | ${KgOps.predCase} AS rel_label,
          | 'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst_id
-         |FROM cz ORDER BY src_id, rel_label, dst_id""".stripMargin,
+         |FROM cz ORDER BY src_id, rel_label, dst_id""".stripMargin),
     // q32 oracle: the rows the streaming query must have KEPT (late row
     // i=45 dropped; windows past the final watermark never emitted) with
     // counts recomputed relationally.
-    "q32_stream_windows" ->
+    QuerySpec("q32_stream_windows", KgOps.q32StreamWindows,
       """WITH rows_ AS (
         | SELECT i, CASE WHEN i % 2 = 0 THEN 'en' ELSE 'de' END AS lang
         | FROM range(0, 300) t(i)
@@ -404,10 +264,10 @@ object SparkEntry {
         | UNION ALL SELECT 1100, 'en')
         |SELECT CAST((i // 60) * 60 AS BIGINT) AS window_min, lang,
         | COUNT(*) AS n_pages
-        |FROM rows_ GROUP BY 1, 2 ORDER BY window_min, lang""".stripMargin,
+        |FROM rows_ GROUP BY 1, 2 ORDER BY window_min, lang""".stripMargin),
     // q35 oracle: one session per (user, burst) recomputed closed-form —
     // start = first event offset, end = last event offset + the 30 min gap
-    "q35_stream_sessions" ->
+    QuerySpec("q35_stream_sessions", KgOps.q35StreamSessions,
       """WITH e AS (
         | SELECT doc_id % 5 AS u, doc_id // 100 AS b,
         |        doc_id * 30 + (doc_id // 100) * 3600 AS off
@@ -416,18 +276,18 @@ object SparkEntry {
         | CAST(MIN(off) AS BIGINT) AS start_off,
         | CAST(MAX(off) + 1800 AS BIGINT) AS end_off,
         | COUNT(*) AS n_events
-        |FROM e GROUP BY u, b ORDER BY user_id, start_off""".stripMargin,
+        |FROM e GROUP BY u, b ORDER BY user_id, start_off""".stripMargin),
     // q37 oracle: the planted survivor set — first occurrences, the
     // in-window dup dropped, the post-eviction dup re-emitted
-    "q37_stream_dedup_ttl" ->
+    QuerySpec("q37_stream_dedup_ttl", KgOps.q37StreamDedupTtl,
       """SELECT CAST(k AS BIGINT) AS k, CAST(off AS BIGINT) AS off
         |FROM (VALUES (0, 0), (1, 60), (2, 120), (999, 1800), (0, 1500))
         |  v(k, off)
-        |ORDER BY off, k""".stripMargin,
+        |ORDER BY off, k""".stripMargin),
     // q38 oracle: the stream-stream interval join's complete result IS
     // the batch join (inner joins emit every pair once both sides
     // arrive; the 45-day watermark out-spans the table so nothing drops)
-    "q38_stream_join" ->
+    QuerySpec("q38_stream_join", KgOps.q38StreamJoin,
       """SELECT v.event_id AS view_id, p.event_id AS purchase_id,
         | v.user_id,
         | epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
@@ -435,11 +295,11 @@ object SparkEntry {
         |  ON v.user_id = p.user_id
         | AND v.event_type = 'view' AND p.event_type = 'purchase'
         | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 DAY
-        |ORDER BY view_id, purchase_id""".stripMargin,
+        |ORDER BY view_id, purchase_id""".stripMargin),
     // q41: the left-outer variant — unmatched views flush once the
     // sentinel-advanced global watermark closes their windows, so the
     // complete output is the batch LEFT join
-    "q41_stream_left_join" ->
+    QuerySpec("q41_stream_left_join", KgOps.q41StreamLeftJoin,
       """SELECT v.event_id AS view_id, v.user_id,
         | p.event_id AS purchase_id,
         | epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
@@ -448,15 +308,15 @@ object SparkEntry {
         | AND p.event_type = 'purchase'
         | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 DAY
         |WHERE v.event_type = 'view'
-        |ORDER BY view_id, purchase_id""".stripMargin,
+        |ORDER BY view_id, purchase_id""".stripMargin),
     // q36 oracle: inner enrichment join + daily counts — every window is
     // emitted (the sentinel pushed the final watermark past them all)
-    "q36_stream_enrich" ->
+    QuerySpec("q36_stream_enrich", KgOps.q36StreamEnrich,
       """SELECT CAST(epoch(date_trunc('day', ts)) // 86400 AS BIGINT) AS day,
         | c_mktsegment AS segment, COUNT(*) AS n_events
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY day, segment""".stripMargin,
-    "q23_array_any" ->
+        |GROUP BY 1, 2 ORDER BY day, segment""".stripMargin),
+    QuerySpec("q23_array_any", Analysis.q23ArrayAny,
       """SELECT c_mktsegment, COUNT(*) AS n_customers FROM (
         | SELECT o_custkey,
         |  MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS has_u,
@@ -464,21 +324,21 @@ object SparkEntry {
         | FROM orders GROUP BY o_custkey) t
         |JOIN customer ON o_custkey = c_custkey
         |WHERE has_u = 1 AND has_l = 0
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-        "q25_clear_props" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QuerySpec("q25_clear_props", GraphOps.q25ClearProps,
       """SELECT CAST(c_custkey AS VARCHAR) AS id, c_mktsegment AS segment,
         |  CASE WHEN c_mktsegment = 'BUILDING' THEN NULL ELSE 'true' END AS exposed
-        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin,
-    "q26_analysis_job" ->
+        |FROM customer WHERE c_nationkey = 1 ORDER BY id""".stripMargin),
+    QuerySpec("q26_analysis_job", GraphOps.q26AnalysisJob,
       """SELECT c_mktsegment AS segment, COUNT(*) AS n_flagged,
         |  CAST(0 AS BIGINT) AS exposed_left
         |FROM customer WHERE c_nationkey = 1 AND c_acctbal > 5000.0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // q42: three SHIPPED analysis jobs (data/jobs/analysis) over a
     // deterministic TPC-H graph slice — every report row recomputed
     // arithmetically; absent groups (e.g. zero dangling dsts) must be
     // absent on both sides (HAVING mirrors Spark's empty GROUP BY)
-    "q42_shipped_jobs" ->
+    QuerySpec("q42_shipped_jobs", GraphOps.q42ShippedJobs,
       """WITH cust AS (SELECT * FROM customer WHERE c_nationkey = 1),
         |nodes AS (
         |  SELECT 'Customer' AS label, CAST(c_custkey AS VARCHAR) AS id,
@@ -523,8 +383,8 @@ object SparkEntry {
         |    WHERE n.label = 'Customer' AND n.id = e.dst_id)
         |  HAVING COUNT(*) > 0)
         |SELECT job, metric, k, CAST(n AS BIGINT) AS n FROM rpt
-        |ORDER BY job, metric, k""".stripMargin,
-    "q27_drift_states" ->
+        |ORDER BY job, metric, k""".stripMargin),
+    QuerySpec("q27_drift_states", GraphOps.q27DriftStates,
       """WITH cp AS (
         |  SELECT CAST(c_custkey AS VARCHAR) AS id,
         |         string_agg(DISTINCT o_orderpriority, '|' ORDER BY o_orderpriority) AS prios
@@ -536,29 +396,29 @@ object SparkEntry {
         |  SELECT 'added' AS direction, id, prios FROM b WHERE id NOT IN (SELECT id FROM a)
         |  UNION ALL
         |  SELECT 'removed', id, prios FROM a WHERE id NOT IN (SELECT id FROM b)) t
-        |ORDER BY direction, id""".stripMargin,
-    "q28_selected_rels" ->
+        |ORDER BY direction, id""".stripMargin),
+    QuerySpec("q28_selected_rels", GraphOps.q28SelectedRels,
       """WITH o AS (SELECT o_orderkey FROM orders
         |  JOIN customer ON o_custkey = c_custkey WHERE c_nationkey = 1)
         |SELECT run, rel_label, n_edges FROM (
         |  SELECT 'all' AS run, 'PLACED_BY' AS rel_label, (SELECT COUNT(*) FROM o) AS n_edges
         |  UNION ALL SELECT 'all', 'RESOURCE', (SELECT COUNT(*) FROM o)
         |  UNION ALL SELECT 'subset', 'PLACED_BY', (SELECT COUNT(*) FROM o)) t
-        |ORDER BY run, rel_label""".stripMargin,
+        |ORDER BY run, rel_label""".stripMargin),
     // q31 runs the q14 scenario through the endpoint-index DETACH path;
     // the expected state is identical by contract.
-    "q31_indexed_cleanup" ->
+    QuerySpec("q31_indexed_cleanup", GraphOps.q31IndexedCleanup,
       """SELECT CAST(c_custkey AS VARCHAR) AS id,
         | CAST(100 AS BIGINT) AS firstseen, CAST(200 AS BIGINT) AS lastupdated,
         | CAST(1 AS BIGINT) AS n_res_edges
         |FROM customer WHERE c_nationkey = 1 AND c_custkey % 2 = 0
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin),
     // q30 expected state: round 1 synced both tenants at tag 100 and ran
     // the gated post job (post_run_tag=100 on both Nation containers);
     // round 2 refreshed tenant 1's even customers at tag 200 and cleaned
     // its stale odds, while tenant 2's simulated fetch failure left its
     // customers untouched and SKIPPED the post job (marker stays 100).
-    "q30_multi_tenant" ->
+    QuerySpec("q30_multi_tenant", GraphOps.q30MultiTenant,
       """SELECT * FROM (
         | SELECT 'Nation' AS label, CAST(n_nationkey AS VARCHAR) AS id,
         |  '-' AS tenant, CAST(100 AS BIGINT) AS firstseen,
@@ -571,8 +431,8 @@ object SparkEntry {
         |  '-'
         | FROM customer
         | WHERE c_nationkey = 2 OR (c_nationkey = 1 AND c_custkey % 2 = 0)) t
-        |ORDER BY label, id""".stripMargin,
-"q24_incremental_sync" ->
+        |ORDER BY label, id""".stripMargin),
+    QuerySpec("q24_incremental_sync", GraphOps.q24IncrementalSync,
       """WITH c AS (SELECT COUNT(*) AS n FROM documents),
         |ids AS (SELECT doc_id AS i FROM documents)
         |SELECT 'https://host' || CAST(i % 50 AS VARCHAR) || '.example/p/' || CAST(i AS VARCHAR) AS id,
@@ -580,11 +440,11 @@ object SparkEntry {
         | CAST(CASE WHEN i >= (SELECT n*4//10 FROM c) THEN 200 ELSE 100 END AS BIGINT) AS lastupdated
         |FROM ids
         |WHERE i < (SELECT n*6//10 FROM c) OR i >= (SELECT n*4//10 FROM c)
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin),
     // q34: time travel — v1 = window A's state (fs=lu=100, B-only rows
     // NULL), v2 = the post-B state with firstseen preserved across the
     // upsert; both recomputed from doc_id arithmetic
-    "q34_time_travel" ->
+    QuerySpec("q34_time_travel", GraphOps.q34TimeTravel,
       """WITH c AS (SELECT COUNT(*) AS n FROM documents),
         |ids AS (SELECT doc_id AS i FROM documents),
         |w AS (SELECT i,
@@ -595,10 +455,10 @@ object SparkEntry {
         | CAST(CASE WHEN in_a THEN 100 END AS BIGINT) AS lu_v1,
         | CAST(CASE WHEN in_a THEN 100 ELSE 200 END AS BIGINT) AS fs_v2,
         | CAST(CASE WHEN in_b THEN 200 ELSE 100 END AS BIGINT) AS lu_v2
-        |FROM w WHERE in_a OR in_b ORDER BY id""".stripMargin,
+        |FROM w WHERE in_a OR in_b ORDER BY id""".stripMargin),
     // q39: snapshot changelog — both version states recomputed closed-
     // form; unchanged rows (k ≡ 6 mod 12) must be ABSENT
-    "q39_changelog" ->
+    QuerySpec("q39_changelog", GraphOps.q39Changelog,
       """WITH c AS (SELECT CAST(c_custkey AS VARCHAR) AS id, c_custkey AS k,
         |             c_mktsegment AS seg
         |           FROM customer WHERE c_nationkey = 1),
@@ -613,12 +473,12 @@ object SparkEntry {
         |             WHEN v1.seg <> v2.seg THEN 'update' END AS op
         |      FROM v1 FULL OUTER JOIN v2 ON v1.id = v2.id)
         |SELECT id, op, seg_before, seg_after FROM j
-        |WHERE op IS NOT NULL ORDER BY id""".stripMargin,
+        |WHERE op IS NOT NULL ORDER BY id""".stripMargin),
     // Pages over the co-mention cap (MaxComentionEntitiesPerPage = 256
     // distinct entities) are excluded — a no-op at every test scale
     // (≤ 6 entities/page) but part of the operator's contract, so the
     // oracle states it too.
-    "qkg7_comention" ->
+    QuerySpec("qkg7_comention", KgOps.qkg7Comention,
       s"""${KgOps.mentionCte},
          |pe0 AS (SELECT DISTINCT i, ck FROM c),
          |ok AS (SELECT i FROM pe0 GROUP BY i
@@ -628,16 +488,16 @@ object SparkEntry {
          | 'e' || lpad(CAST(b.ck AS VARCHAR), 4, '0') AS entity_b,
          | COUNT(*) AS n_pages
          |FROM pe a JOIN pe b ON a.i = b.i AND a.ck < b.ck
-         |GROUP BY 1, 2 ORDER BY n_pages DESC, entity_a, entity_b LIMIT 30""".stripMargin,
-    "qkg8_salted_degree" ->
+         |GROUP BY 1, 2 ORDER BY n_pages DESC, entity_a, entity_b LIMIT 30""".stripMargin),
+    QuerySpec("qkg8_salted_degree", KgOps.qkg8SaltedDegree,
       s"""${KgOps.mentionCte}
          |SELECT 'e' || lpad(CAST(ck AS VARCHAR), 4, '0') AS entity_id,
          | COUNT(*) AS n_mentions
-         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin,
+         |FROM c GROUP BY 1 ORDER BY n_mentions DESC, entity_id LIMIT 30""".stripMargin),
     // qkg9: triangles of the co-mention graph. The oracle enumerates
     // each triangle once as x < y < z over the canonical (a < b) edge
     // set — pure integer counting, exact.
-    "qkg9_triangles" ->
+    QuerySpec("qkg9_triangles", KgOps.qkg9Triangles,
       s"""${KgOps.mentionCte},
          |pe0 AS (SELECT DISTINCT i, ck FROM c),
          |ok AS (SELECT i FROM pe0 GROUP BY i
@@ -652,7 +512,7 @@ object SparkEntry {
          |       UNION ALL SELECT y FROM t UNION ALL SELECT z FROM t)
          |SELECT 'e' || lpad(CAST(k AS VARCHAR), 4, '0') AS entity_id,
          | COUNT(*) AS n_triangles
-         |FROM pn GROUP BY 1 ORDER BY n_triangles DESC, entity_id LIMIT 30""".stripMargin,
+         |FROM pn GROUP BY 1 ORDER BY n_triangles DESC, entity_id LIMIT 30""".stripMargin),
     // qkg10: 3-iteration PageRank (d = 0.85) over the distinct canonical
     // (subj, obj) triple edges, unrolled in SQL. The per-node incoming
     // contributions are folded left-to-right in contributor order
@@ -661,7 +521,7 @@ object SparkEntry {
     // BIT-identical, not approximately equal. Entity ids are
     // fixed-width ('e' || lpad(..)), so string order == numeric order
     // and both engines fold in the same sequence.
-    "qkg10_pagerank" ->
+    QuerySpec("qkg10_pagerank", KgOps.qkg10PageRank,
       s"""${KgOps.tripleCte},
          |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS src,
          |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS dst FROM cz),
@@ -699,56 +559,60 @@ object SparkEntry {
          |         (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))/800
          |           + CAST(0.85 AS DOUBLE) * COALESCE(s3.s, CAST(0 AS DOUBLE)) AS rank
          |       FROM nodes n LEFT JOIN s3 ON s3.id = n.id)
-         |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin,
+         |SELECT id AS entity_id, rank FROM r3 ORDER BY entity_id""".stripMargin),
     // qkg11: the same 3-iteration PageRank through the TWO-LEVEL salted
     // fold (head-in-degree-proof at 100 TB); the oracle replays the
     // identical fold tree, so the 800 ranks are again BIT-identical.
-    "qkg11_pagerank_salted" -> KgOps.saltedPageRankOracle,
+    QuerySpec("qkg11_pagerank_salted", KgOps.qkg11PageRankSalted,
+      KgOps.saltedPageRankOracle),
     // qkg13: personalized PageRank (teleport restricted to the 16 seed
     // entities); fold tree identical to qkg10's, so bit-identical ranks
-    "qkg13_ppr" -> KgOps.pprOracle,
+    QuerySpec("qkg13_ppr", KgOps.qkg13Ppr, KgOps.pprOracle),
     // qkg14: HITS hubs/authorities, 2 max-normalized iterations — the
     // max is order-free and the sums are contributor-sorted folds, so
     // both doubles per entity are bit-identical
-    "qkg14_hits" -> KgOps.hitsOracle,
+    QuerySpec("qkg14_hits", KgOps.qkg14Hits, KgOps.hitsOracle),
     // qkg15: BFS seed distances — recursive CTE with MIN(dist), integer-exact
-    "qkg15_bfs" -> KgOps.bfsOracle,
+    QuerySpec("qkg15_bfs", KgOps.qkg15Bfs, KgOps.bfsOracle),
     // qkg19: hop-bounded weighted SSSP — recursive ≤4-edge path
     // enumeration with MIN(dist) over integer arithmetic weights
-    "qkg19_sssp" -> KgOps.ssspOracle,
+    QuerySpec("qkg19_sssp", KgOps.qkg19Sssp, KgOps.ssspOracle),
     // qkg20: deterministic DeepWalk corpus — ranked sorted adjacency +
     // the LCG neighbor pick replayed per unrolled step
-    "qkg20_walks" -> KgOps.walksOracle,
+    QuerySpec("qkg20_walks", KgOps.qkg20Walks, KgOps.walksOracle),
     // qkg21: per-predicate out-degree histogram — integer log2 buckets
     // via binary-digit count
-    "qkg21_degree_hist" -> KgOps.degreeHistOracle,
+    QuerySpec("qkg21_degree_hist", KgOps.qkg21DegreeHist,
+      KgOps.degreeHistOracle),
     // qkg22: HyperBall register state — exact ≤4-hop reach sets rebuilt
     // relationally, registers re-derived via the qsk1 arithmetic
-    "qkg22_hyperball" -> KgOps.hyperBallOracle,
+    QuerySpec("qkg22_hyperball", KgOps.qkg22HyperBall, KgOps.hyperBallOracle),
     // qkg24: HyperBall harmonic centrality — raw-estimator floats
     // bit-identical through bucket- and hop-ordered folds
-    "qkg24_harmonic" -> KgOps.harmonicOracle,
+    QuerySpec("qkg24_harmonic", KgOps.qkg24Harmonic, KgOps.harmonicOracle),
     // qkg16: shared-neighbor Jaccard relatedness (hub cap 8 is proven
     // semantics: the oracle excludes super-hub shared neighbors too)
-    "qkg16_related" -> KgOps.relatedOracle,
+    QuerySpec("qkg16_related", KgOps.qkg16Related, KgOps.relatedOracle),
     // qkg23: Adamic–Adar — qkg16's wedge algebra + staged ExactMath ln
     // per capped neighbor degree + sorted per-pair fold (bit-identical)
-    "qkg23_adamic_adar" -> KgOps.adamicAdarOracle,
+    QuerySpec("qkg23_adamic_adar", KgOps.qkg23AdamicAdar,
+      KgOps.adamicAdarOracle),
     // qkg17: 3 synchronous label-propagation rounds over the co-mention
     // graph, majority vote with smallest-label ties — integer counts +
     // string mins, replayed round-for-round by the oracle
-    "qkg17_labelprop" -> KgOps.labelPropOracle,
+    QuerySpec("qkg17_labelprop", KgOps.qkg17LabelProp, KgOps.labelPropOracle),
     // qkg25: the co-mention graph contracted by its LPA labels — the
     // qkg17 replay chain + least/greatest pair contraction
-    "qkg25_community_graph" -> KgOps.communityGraphOracle,
+    QuerySpec("qkg25_community_graph", KgOps.qkg25CommunityGraph,
+      KgOps.communityGraphOracle),
     // qkg18: 3-core of the co-mention graph by iterative peeling; the
     // oracle unrolls 12 rounds (≥ the measured fixpoint depth at every
     // scale; peeling is idempotent at the fixpoint)
-    "qkg18_kcore" -> KgOps.kCoreOracle,
+    QuerySpec("qkg18_kcore", KgOps.qkg18KCore, KgOps.kCoreOracle),
     // qkg12: weakly-connected components of the canonical triple graph,
     // oracle = recursive-CTE label propagation to the min entity id
     // (the qdd3/qann5 pattern over the qkg10 edge set)
-    "qkg12_components" ->
+    QuerySpec("qkg12_components", KgOps.qkg12Components,
       s"""${KgOps.tripleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
          |e AS (SELECT DISTINCT 'e' || lpad(CAST(cs AS VARCHAR), 4, '0') AS u,
          |        'e' || lpad(CAST(co AS VARCHAR), 4, '0') AS v FROM cz),
@@ -760,14 +624,14 @@ object SparkEntry {
          |  UNION
          |  SELECT eg.v, lbl.l FROM lbl JOIN edges eg ON eg.u = lbl.n)
          |SELECT n AS entity_id, MIN(l) AS component FROM lbl
-         |GROUP BY n ORDER BY entity_id""".stripMargin,
+         |GROUP BY n ORDER BY entity_id""".stripMargin),
     // Dedup oracles rebuild the copy corpus and recompute pair ground
     // truth relationally (integer Jaccard threshold — no floating point).
     // qdc1: decontamination ground truth — rebuild the planted eval set
     // (words 11..60 of every 13th doc) and recompute shared-13-gram
     // counts relationally; both engines shingle distinct per doc, so the
     // join-row count IS the distinct shared-n-gram count
-    "qdc1_contamination" ->
+    QuerySpec("qdc1_contamination", DataOps.qdc1Contamination,
       """WITH tw AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |ev AS (SELECT doc_id AS eval_id, ws[11:60] AS ws FROM tw
         |       WHERE doc_id % 13 = 0),
@@ -779,11 +643,11 @@ object SparkEntry {
         |  FROM ev JOIN range(0, 100000) r(i) ON r.i <= len(ws) - 13)
         |SELECT t.doc_id AS train_id, e.eval_id, COUNT(*) AS shared_ngrams
         |FROM tsh t JOIN esh e ON e.g = t.g
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // qdc2: the decontamination DECISION table — qdc1's collision
     // machinery at minShared=13, aggregated per train doc, left-joined
     // so clean docs report zeros
-    "qdc2_decontaminate" ->
+    QuerySpec("qdc2_decontaminate", DataOps.qdc2Decontaminate,
       """WITH tw AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |ev AS (SELECT doc_id AS eval_id, ws[11:60] AS ws FROM tw
         |       WHERE doc_id % 13 = 0),
@@ -803,16 +667,16 @@ object SparkEntry {
         |  CAST(COALESCE(h.n_eval_hits, 0) AS BIGINT) AS n_eval_hits,
         |  CAST(COALESCE(h.max_shared, 0) AS BIGINT) AS max_shared
         |FROM documents d LEFT JOIN h USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "qdd1_exact_dedup" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("qdd1_exact_dedup", DataOps.qdd1ExactDedup,
       s"""$dedupCorpusCte
          |SELECT md5(text) AS text_hash, COUNT(*) AS n_docs,
          | MIN(doc_id) AS canonical
-         |FROM corpus GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_hash""".stripMargin,
-    "qdd2_neardup_allpairs" ->
+         |FROM corpus GROUP BY 1 HAVING COUNT(*) > 1 ORDER BY text_hash""".stripMargin),
+    QuerySpec("qdd2_neardup_allpairs", DataOps.qdd2NearDupAllPairs,
       s"""$dedupCorpusCte, $dedupPairsCte
-         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin,
-    "qdd3_dedup_clusters" ->
+         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin),
+    QuerySpec("qdd3_dedup_clusters", DataOps.qdd3DedupClusters,
       s"""$dedupCorpusCte, $dedupPairsCte,
          |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
          |          UNION SELECT doc_b, doc_a FROM pairs),
@@ -821,9 +685,9 @@ object SparkEntry {
          |  UNION
          |  SELECT e.v, lbl.l FROM lbl JOIN edges e ON e.u = lbl.n)
          |SELECT n AS doc_id, MIN(l) AS canonical FROM lbl
-         |GROUP BY n ORDER BY doc_id""".stripMargin,
+         |GROUP BY n ORDER BY doc_id""".stripMargin),
     // qdd7: per-cluster representative — most tokens, tie -> min doc_id
-    "qdd7_keep_best" ->
+    QuerySpec("qdd7_keep_best", DataOps.qdd7KeepBest,
       s"""$dedupCorpusCte, $dedupPairsCte,
          |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
          |          UNION SELECT doc_b, doc_a FROM pairs),
@@ -842,10 +706,10 @@ object SparkEntry {
          |   COUNT(*) OVER (PARTITION BY cl.canonical) AS n_docs
          |  FROM cl JOIN tk ON tk.doc_id = cl.doc_id)
          |SELECT canonical, kept_doc, kept_tokens, n_docs FROM best
-         |WHERE rn = 1 ORDER BY canonical""".stripMargin,
+         |WHERE rn = 1 ORDER BY canonical""".stripMargin),
     // qsp5: hash negatives replayed with the same md5 draw arithmetic,
     // accidental positives excluded exactly
-    "qsp5_negatives" ->
+    QuerySpec("qsp5_negatives", DataOps.qsp5Negatives,
       """WITH d AS (SELECT doc_id FROM documents),
         |pos AS (SELECT doc_id, doc_id % 1000 AS entity FROM d
         |        UNION ALL
@@ -860,18 +724,18 @@ object SparkEntry {
         |SELECT doc_id, entity, draw, negative FROM draws dr
         |WHERE NOT EXISTS (SELECT 1 FROM pos p
         |                  WHERE p.doc_id = dr.doc_id AND p.entity = dr.negative)
-        |ORDER BY doc_id, entity, draw""".stripMargin,
-    "qdd4_minhash_lsh" ->
+        |ORDER BY doc_id, entity, draw""".stripMargin),
+    QuerySpec("qdd4_minhash_lsh", DataOps.qdd4MinhashLsh,
       s"""$dedupCorpusCte, $dedupPairsCte
-         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin,
-    "qdd5_simhash" ->
+         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin),
+    QuerySpec("qdd5_simhash", DataOps.qdd5Simhash,
       s"""$dedupCorpusCte, $dedupPairsCte
-         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin,
+         |SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""".stripMargin),
     // qdd6: CDC chunk dedup — the oracle rebuilds the copy corpus,
     // replays the boundary-word rule (fold (h*31+c) % 1000003 over the
     // word's code units, boundary when h % 8 = 0), re-chunks via a
     // prefix-sum window, and recomputes the df-capped shared-chunk pairs
-    "qdd6_cdc_pairs" ->
+    QuerySpec("qdd6_cdc_pairs", DataOps.qdd6CdcPairs,
       s"""$dedupCorpusCte,
          |w AS (SELECT doc_id, r.i AS pos, ws[r.i + 1] AS w
          |      FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus) c
@@ -898,10 +762,10 @@ object SparkEntry {
          |  COUNT(*) AS shared_chunks
          |FROM kept a JOIN kept b2
          |  ON a.chunk_hash = b2.chunk_hash AND a.doc_id < b2.doc_id
-         |GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY doc_a, doc_b""".stripMargin,
+         |GROUP BY 1, 2 HAVING COUNT(*) >= 2 ORDER BY doc_a, doc_b""".stripMargin),
     // qev1: sessionization — 8 h inactivity timeout, per-user (ts,
     // event_id) order, all epoch-microsecond integers
-    "qev1_sessionize" ->
+    QuerySpec("qev1_sessionize", DataOps.qev1Sessionize,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         |g AS (SELECT user_id, us, event_id,
         |  CASE WHEN lag(us) OVER w IS NULL
@@ -914,20 +778,20 @@ object SparkEntry {
         |  FROM g)
         |SELECT user_id, session_idx, COUNT(*) AS n_events,
         | MIN(us) AS start_us, MAX(us) AS end_us
-        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
+        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin),
     // qev2: cohort retention — integer day arithmetic (epoch_us div
     // one day), distinct activity, per-user min cohort
-    "qev2_retention" ->
+    QuerySpec("qev2_retention", DataOps.qev2Retention,
       """WITH a AS (SELECT DISTINCT user_id,
         |  CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events),
         |c AS (SELECT user_id, MIN(day) AS cohort_day FROM a GROUP BY 1)
         |SELECT cohort_day, day - cohort_day AS day_offset,
         | COUNT(DISTINCT a.user_id) AS n_users
         |FROM a JOIN c USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin),
     // qev3: ordered funnel with first-touch anchors — each step's
     // anchor is the min event time STRICTLY after the previous anchor
-    "qev3_funnel" ->
+    QuerySpec("qev3_funnel", DataOps.qev3Funnel,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |s1 AS (SELECT user_id, MIN(us) AS a1 FROM e
         |       WHERE event_type = 'view' GROUP BY 1),
@@ -942,10 +806,10 @@ object SparkEntry {
         |  (SELECT COUNT(*) FROM s1) AS n_users
         | UNION ALL SELECT 2, 'click', (SELECT COUNT(*) FROM s2)
         | UNION ALL SELECT 3, 'purchase', (SELECT COUNT(*) FROM s3)) t
-        |ORDER BY step""".stripMargin,
+        |ORDER BY step""".stripMargin),
     // qev4: exact rank-selected quantiles — target rank by integer ceil
     // division, values are INPUT doubles so they compare bit-for-bit
-    "qev4_quantiles" ->
+    QuerySpec("qev4_quantiles", DataOps.qev4Quantiles,
       """WITH r AS (SELECT event_type, value, ROW_NUMBER() OVER (
         |    PARTITION BY event_type ORDER BY value, event_id) AS rn
         |  FROM events),
@@ -956,11 +820,11 @@ object SparkEntry {
         |t AS (SELECT event_type, pct, (pct * n + 99) // 100 AS target_rn FROM w)
         |SELECT t.event_type, t.pct, r.value
         |FROM t JOIN r ON r.event_type = t.event_type AND r.rn = t.target_rn
-        |ORDER BY t.event_type, t.pct""".stripMargin,
+        |ORDER BY t.event_type, t.pct""".stripMargin),
     // qev5: as-of join (last-touch attribution) — latest view ≤ each
     // purchase; the oracle states the tiebreak (max view_id at equal
     // times) the engine's union+carry-forward resolves to
-    "qev5_asof" ->
+    QuerySpec("qev5_asof", DataOps.qev5Asof,
       """WITH e AS (SELECT event_id, epoch_us(ts) AS us, user_id, event_type
         |           FROM events),
         |p AS (SELECT event_id AS purchase_id, us AS purchase_us, user_id
@@ -972,24 +836,24 @@ object SparkEntry {
         |   ORDER BY v.us DESC, v.event_id DESC) AS rn
         | FROM p JOIN e v ON v.user_id = p.user_id
         |  AND v.event_type = 'view' AND v.us <= p.purchase_us) t
-        |WHERE rn = 1 ORDER BY purchase_id""".stripMargin,
+        |WHERE rn = 1 ORDER BY purchase_id""".stripMargin),
     // qev6: trailing 7-day rolling distinct active users — the oracle
     // states it the declarative way (day × activity range join +
     // COUNT DISTINCT); the engine's disjoint-interval explode must
     // agree exactly
-    "qev6_rolling_active" ->
+    QuerySpec("qev6_rolling_active", DataOps.qev6RollingActive,
       """WITH a AS (SELECT DISTINCT user_id,
         |  CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events),
         |d AS (SELECT unnest(generate_series((SELECT MIN(day) FROM a),
         |  (SELECT MAX(day) FROM a) + 6)) AS day)
         |SELECT d.day, COUNT(DISTINCT a.user_id) AS n_users
         |FROM d JOIN a ON a.day BETWEEN d.day - 6 AND d.day
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // qev7: daily LOCF gap fill — the oracle states it declaratively:
     // per-(user,day) last value by (us, event_id) rank, a generated
     // per-user day grid, and LAST_VALUE IGNORE NULLS — the engine's
     // argmax-struct + disjoint-interval explode must agree row-for-row
-    "qev7_locf" ->
+    QuerySpec("qev7_locf", DataOps.qev7Locf,
       """WITH e AS (SELECT user_id, event_id, value, epoch_us(ts) AS us,
         |  CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events),
         |d AS (SELECT user_id, day, value FROM (
@@ -1003,11 +867,11 @@ object SparkEntry {
         | LAST_VALUE(d.value IGNORE NULLS) OVER (
         |  PARTITION BY g.user_id ORDER BY g.day) AS value
         |FROM grid g LEFT JOIN d ON d.user_id = g.user_id AND d.day = g.day
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // qev8: consecutive-event transition counts per user (time order,
     // event_id tiebreak); prob is one double division of exact integers
     // qev11: time-to-convert — two conditional MINs per user, integer gap
-    "qev11_time_to_convert" ->
+    QuerySpec("qev11_time_to_convert", DataOps.qev11TimeToConvert,
       """SELECT user_id, first_from_us, first_to_us,
         | first_to_us - first_from_us AS ttc_us
         |FROM (SELECT user_id,
@@ -1017,11 +881,11 @@ object SparkEntry {
         |           THEN epoch_us(ts) END) AS first_to_us
         |      FROM events GROUP BY 1) t
         |WHERE first_from_us IS NOT NULL AND first_to_us >= first_from_us
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
     // qsp8: token-budget mixture — the two-level prefix sum equals a
     // naive per-stratum running total under the (shard, h, key) order,
     // which is what the oracle states; boundary doc included
-    "qsp8_token_budget" ->
+    QuerySpec("qsp8_token_budget", DataOps.qsp8TokenBudget,
       """WITH d AS (SELECT lang, doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
         |    md5(lang || ':' || CAST(doc_id AS VARCHAR)) AS h
@@ -1037,10 +901,10 @@ object SparkEntry {
         |    0) AS BIGINT) AS cum_before FROM s)
         |SELECT lang, doc_id, n AS n_tokens, cum_before
         |FROM c WHERE cum_before < budget
-        |ORDER BY lang, doc_id""".stripMargin,
+        |ORDER BY lang, doc_id""".stripMargin),
     // qsp7: per-epoch shuffled order — shard = first md5 byte, rank
     // within (epoch, shard) by (hash, key)
-    "qsp7_epoch_order" ->
+    QuerySpec("qsp7_epoch_order", DataOps.qsp7EpochOrder,
       """WITH e AS (SELECT CAST(ep.epoch AS BIGINT) AS epoch, d.doc_id,
         |    md5(CAST(ep.epoch AS VARCHAR) || ':'
         |      || CAST(d.doc_id AS VARCHAR)) AS h
@@ -1052,11 +916,11 @@ object SparkEntry {
         |SELECT epoch, shard, doc_id,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY epoch, shard
         |    ORDER BY h, doc_id) AS BIGINT) AS ord
-        |FROM s ORDER BY epoch, shard, ord""".stripMargin,
+        |FROM s ORDER BY epoch, shard, ord""".stripMargin),
     // qev10: RFM quintiles — decimal-exact monetary, integer recency,
     // NTILE(5) with user_id tie-breaks (the SQL-standard split both
     // engines implement)
-    "qev10_rfm" ->
+    QuerySpec("qev10_rfm", DataOps.qev10Rfm,
       """WITH mx AS (SELECT MAX(epoch_us(ts)) AS m FROM events),
         |u AS (SELECT user_id,
         |        CAST((mx.m - MAX(epoch_us(ts))) // 86400000000 AS BIGINT)
@@ -1071,10 +935,10 @@ object SparkEntry {
         |   AS f_score,
         | CAST(NTILE(5) OVER (ORDER BY monetary DESC, user_id) AS BIGINT)
         |   AS m_score
-        |FROM u ORDER BY user_id""".stripMargin,
+        |FROM u ORDER BY user_id""".stripMargin),
     // qsk9: HLL audience overlap — per-segment registers, union by MAX,
     // raw estimates (bucket-ordered folds), inclusion–exclusion
-    "qsk9_hll_overlap" ->
+    QuerySpec("qsk9_hll_overlap", DataOps.qsk9HllOverlap,
       """WITH vp AS (SELECT event_type AS tag,
         |        md5(CAST(user_id AS VARCHAR)) AS h
         |      FROM events WHERE event_type IN ('view', 'purchase')),
@@ -1109,10 +973,10 @@ object SparkEntry {
         |  FROM est)
         |SELECT est_view, est_purchase, est_union,
         | est_view + est_purchase - est_union AS est_overlap
-        |FROM sel""".stripMargin,
+        |FROM sel""".stripMargin),
     // qsk8: per-group HLL registers — qsk1's arithmetic with the
     // event_type dimension prefixed
-    "qsk8_hll_by_type" ->
+    QuerySpec("qsk8_hll_by_type", DataOps.qsk8HllByType,
       """WITH p AS (SELECT event_type,
         |  CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
         |  ltrim(substring(h, 3, 15), '0') AS t
@@ -1125,10 +989,10 @@ object SparkEntry {
         |   WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
         |   WHEN '7' THEN 1 ELSE 0 END + 1 AS BIGINT)) AS max_rank,
         | COUNT(*) AS n_keys
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // qev9: SCD-2 validity intervals — LEAD over (us, event_id); value
     // doubles pass through unchanged so they bit-match
-    "qev9_scd2" ->
+    QuerySpec("qev9_scd2", DataOps.qev9Scd2,
       """SELECT user_id, event_id, value, valid_from_us,
         | valid_to_us, valid_to_us IS NULL AS is_current
         |FROM (
@@ -1136,8 +1000,8 @@ object SparkEntry {
         |  LEAD(epoch_us(ts)) OVER (PARTITION BY user_id
         |    ORDER BY epoch_us(ts), event_id) AS valid_to_us
         | FROM events) t
-        |ORDER BY user_id, valid_from_us, event_id""".stripMargin,
-    "qev8_transitions" ->
+        |ORDER BY user_id, valid_from_us, event_id""".stripMargin),
+    QuerySpec("qev8_transitions", DataOps.qev8Transitions,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type
         |           FROM events),
         |p AS (SELECT event_type AS from_type, LEAD(event_type) OVER (
@@ -1148,21 +1012,21 @@ object SparkEntry {
         |      FROM c GROUP BY 1)
         |SELECT c.from_type, c.to_type, c.n, t.from_total,
         | CAST(c.n AS DOUBLE) / CAST(t.from_total AS DOUBLE) AS prob
-        |FROM c JOIN t USING (from_type) ORDER BY 1, 2""".stripMargin,
+        |FROM c JOIN t USING (from_type) ORDER BY 1, 2""".stripMargin),
     // qsp4: cumulative md5 thresholds — floor-rounded 0.8/0.9 of 2^32
     // as hex (cccccccd / e6666666); the last split is the unconditional
     // remainder so every key is assigned
-    "qsp4_splits" ->
+    QuerySpec("qsp4_splits", DataOps.qsp4Splits,
       """SELECT doc_id,
         | CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccd'
         |       THEN 'train'
         |      WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666'
         |       THEN 'val'
         |      ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // qsk2: Count-Min counters — 4 rows x 1024 columns, counter =
     // md5('r:term') first 32 bits mod width; zero counters not emitted
-    "qsk2_cms_counters" ->
+    QuerySpec("qsk2_cms_counters", DataOps.qsk2CmsCounters,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term
         |             FROM documents),
         |x AS (SELECT r.r, CAST(concat('0x', substring(md5(concat(
@@ -1170,11 +1034,11 @@ object SparkEntry {
         |      FROM tok CROSS JOIN
         |       (SELECT unnest(generate_series(0, 3)) AS r) r)
         |SELECT r, c, COUNT(*) AS cnt FROM x GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // qsp6: A-Res priorities replayed with the ENGINE-PORTABLE
     // polynomial ln (ExactMath — libm ln differs across engines in the
     // last bit); ln u = lnOfInt(h+1) − 32·ln2, staged CTE intermediates
-    "qsp6_weighted_sample" ->
+    QuerySpec("qsp6_weighted_sample", DataOps.qsp6WeightedSample,
       s"""WITH h AS (SELECT o_orderkey, o_totalprice,
          |  CAST(concat('0x', substring(md5(CAST(o_orderkey AS VARCHAR)),
          |    1, 8)) AS BIGINT) + 1 AS n
@@ -1187,19 +1051,19 @@ object SparkEntry {
          |SELECT o_orderkey, o_totalprice,
          | (lnn - CAST(32.0 AS DOUBLE) * CAST(${ExactMath.Ln2} AS DOUBLE))
          |   / o_totalprice AS sample_priority
-         |FROM f ORDER BY sample_priority DESC, o_orderkey LIMIT 50""".stripMargin,
+         |FROM f ORDER BY sample_priority DESC, o_orderkey LIMIT 50""".stripMargin),
     // qsk7: histogram bins replayed — same float association, edge
     // clamping included
-    "qsk7_histogram" ->
+    QuerySpec("qsk7_histogram", DataOps.qsk7Histogram,
       """SELECT GREATEST(0, LEAST(63,
         |  CAST(floor((value - CAST(0.0 AS DOUBLE))
         |    / (CAST(20.0 AS DOUBLE) - CAST(0.0 AS DOUBLE)) * 64) AS BIGINT)))
         |  AS bin, COUNT(*) AS cnt
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // qsk6: merged half-sketches must equal the whole-corpus registers
     // (same SQL as qsk1 — equivalence proven, not replayed)
-    "qsk6_hll_merge" ->
+    QuerySpec("qsk6_hll_merge", DataOps.qsk6HllMerge,
       """WITH p AS (SELECT
         |  CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
         |  ltrim(substring(h, 3, 15), '0') AS t
@@ -1211,9 +1075,9 @@ object SparkEntry {
         |   WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
         |   WHEN '7' THEN 1 ELSE 0 END + 1 AS BIGINT)) AS max_rank,
         | COUNT(*) AS n_keys
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
     // qsk4: bloom 1-bits replayed with the same md5 position hash
-    "qsk4_bloom_bits" ->
+    QuerySpec("qsk4_bloom_bits", DataOps.qsk4BloomBits,
       """WITH k AS (SELECT o_orderkey FROM orders
         |           WHERE o_orderpriority = '1-URGENT'),
         |x AS (SELECT CAST(concat('0x', substring(md5(concat(
@@ -1221,19 +1085,19 @@ object SparkEntry {
         |        1, 8)) AS BIGINT) % 65536 AS pos
         |      FROM k CROSS JOIN
         |       (SELECT unnest(generate_series(0, 2)) AS j) j)
-        |SELECT DISTINCT pos FROM x ORDER BY pos""".stripMargin,
+        |SELECT DISTINCT pos FROM x ORDER BY pos""".stripMargin),
     // qsk5: the bloom layer is transparent — the oracle is the plain
     // exact semi-join aggregate
-    "qsk5_bloom_semijoin" ->
+    QuerySpec("qsk5_bloom_semijoin", DataOps.qsk5BloomSemijoin,
       """SELECT l_returnflag, COUNT(*) AS n_items,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem
         |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
         |                     WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // qsk3: CMS point estimates for the top-20 tokens — probe cells via
     // the same md5 hash as the counter build, MIN over depth, join truth
-    "qsk3_cms_estimates" ->
+    QuerySpec("qsk3_cms_estimates", DataOps.qsk3CmsEstimates,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term
         |             FROM documents),
         |truth AS (SELECT term, COUNT(*) AS true_cnt FROM tok GROUP BY 1),
@@ -1251,14 +1115,14 @@ object SparkEntry {
         |SELECT pc.term, pc.true_cnt,
         |  MIN(COALESCE(ct.cnt, CAST(0 AS BIGINT))) AS cms_est
         |FROM pc LEFT JOIN counters ct USING (r, c)
-        |GROUP BY 1, 2 ORDER BY term""".stripMargin,
-    "qtx1_tokens" ->
+        |GROUP BY 1, 2 ORDER BY term""".stripMargin),
+    QuerySpec("qtx1_tokens", DataOps.qtx1Tokens,
       """SELECT doc_id,
         | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         | CAST(length(text) AS BIGINT) AS n_chars,
         | CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "qtx2_quality" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx2_quality", DataOps.qtx2Quality,
       """SELECT doc_id,
         | CAST(len(list_filter(string_split(text, ' '),
         |   w -> w IN ('the','a','an','and','of','to','in'))) AS BIGINT) AS n_stopwords,
@@ -1269,8 +1133,8 @@ object SparkEntry {
         |   / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
         | CAST(length(text) - len(string_split(text, ' ')) + 1 AS DOUBLE)
         |   / CAST(len(string_split(text, ' ')) AS DOUBLE) AS mean_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "qtx3_langid" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx3_langid", DataOps.qtx3LangId,
       """WITH s AS (
         | SELECT doc_id, lang,
         |  CAST((length(' '||text||' ') - length(replace(' '||text||' ',' the ','')))/5
@@ -1293,18 +1157,18 @@ object SparkEntry {
         |      WHEN s_es = GREATEST(s_en,s_de,s_es,s_fr) THEN 'es'
         |      ELSE 'fr' END AS pred_lang,
         | s_en
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "qtx4_fingerprint" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx4_fingerprint", DataOps.qtx4Fingerprint,
       """SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "qtx5_rabin" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx5_rabin", DataOps.qtx5Rabin,
       """SELECT doc_id, CAST(list_reduce(
         |  list_prepend(CAST(0 AS HUGEINT),
         |    list_transform(string_split(text, ''), c -> CAST(unicode(c) AS HUGEINT))),
         |  (h, c) -> (h * 257 + c) % 2305843009213693951
         |) AS BIGINT) AS rabin_fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "qtx6_chunks" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx6_chunks", DataOps.qtx6Chunks,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |s AS (SELECT doc_id, ws, len(ws) AS n FROM t),
         |c AS (SELECT doc_id, r.i AS st, n, ws FROM s
@@ -1312,10 +1176,10 @@ object SparkEntry {
         |SELECT doc_id, CAST(st // 24 AS BIGINT) AS chunk_idx,
         | CAST(LEAST(32, n - st) AS BIGINT) AS n_chunk_tokens,
         | md5(array_to_string(list_slice(ws, st + 1, st + 32), ' ')) AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
     // qtx7: DuckDB regexp_replace needs the 'g' flag (Spark replaces all
     // matches by default); patterns are ASCII-only so Java regex ≡ RE2.
-    "qtx7_redact" ->
+    QuerySpec("qtx7_redact", DataOps.qtx7Redact,
       """WITH p AS (
         | SELECT doc_id,
         |  text || ' contact user' || CAST(doc_id AS VARCHAR) || '@mail'
@@ -1332,8 +1196,8 @@ object SparkEntry {
         |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |   '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
         |   '\b\d{3}-\d{4}\b', '<PHONE>', 'g')) AS redacted_hash
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "qtx8_bigram_support" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    QuerySpec("qtx8_bigram_support", DataOps.qtx8BigramSupport,
       """WITH b AS (
         | SELECT doc_id,
         |  ws[r.i + 1] || ' ' || ws[r.i + 2] AS bigram
@@ -1347,11 +1211,11 @@ object SparkEntry {
         | CAST(SUM(CASE WHEN bigram_df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
         |   / CAST(COUNT(*) AS DOUBLE) AS support_ratio
         |FROM b JOIN df_ USING (bigram)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // qtx9: top-3 distinctive terms per doc by the INTEGER-EXACT score
     // tf * 10^6 // df (integral division — the log-free tf·idf ranking);
     // ties break by term, so the top-3 set is engine-independent
-    "qtx9_distinctive_terms" ->
+    QuerySpec("qtx9_distinctive_terms", DataOps.qtx9DistinctiveTerms,
       """WITH toks AS (
         | SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |t AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks
@@ -1363,12 +1227,12 @@ object SparkEntry {
         |r AS (SELECT *, ROW_NUMBER() OVER (
         |        PARTITION BY doc_id ORDER BY score DESC, term) AS rn FROM s)
         |SELECT doc_id, term, tf, df, score FROM r WHERE rn <= 3
-        |ORDER BY doc_id, term""".stripMargin,
+        |ORDER BY doc_id, term""".stripMargin),
     // qtx17: cross-document segment dedup — 15-token non-overlapping
     // segments over the planted-copy corpus, keep-first by the composite
     // occurrence key doc_id·10⁶ + seg_idx; kept text pinned by ordered
     // md5 (empty → md5(''))
-    "qtx17_segment_dedup" ->
+    QuerySpec("qtx17_segment_dedup", DataOps.qtx17SegmentDedup,
       s"""$dedupCorpusCte,
          |t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
          |segs AS (SELECT doc_id, CAST(r.i // 15 AS BIGINT) AS seg_idx,
@@ -1384,12 +1248,12 @@ object SparkEntry {
          |    ' ' ORDER BY seg_idx), '')) AS kept_md5,
          |  COUNT(*) - COUNT(CASE WHEN occ = keep_occ THEN 1 END) AS n_dropped
          |FROM o JOIN f USING (sh)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // qtx18: 3 unrolled BPE merge iterations (see bpeOracle)
-    "qtx18_bpe_merges" -> bpeOracle(3),
+    QuerySpec("qtx18_bpe_merges", DataOps.qtx18BpeMerges, bpeOracle(3)),
     // qtx21: novelty — per-gram first occurrence on the composite
     // doc_id·10⁶+pos, fraction of occurrences introduced by this doc
-    "qtx21_novelty" ->
+    QuerySpec("qtx21_novelty", DataOps.qtx21Novelty,
       s"""$dedupCorpusCte,
          |t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
          |g AS (SELECT doc_id, r.i AS p,
@@ -1404,9 +1268,9 @@ object SparkEntry {
          |  CAST(COUNT(CASE WHEN first_occ // 1000000 = doc_id THEN 1 END)
          |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS novelty
          |FROM o JOIN f USING (gram)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // qtx20: per-source profile — counts + dominant-language argmax
-    "qtx20_source_profile" ->
+    QuerySpec("qtx20_source_profile", DataOps.qtx20SourceProfile,
       """WITH p AS (SELECT source, COUNT(*) AS n_docs,
         |       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
         |       COUNT(DISTINCT lang) AS n_langs
@@ -1418,14 +1282,14 @@ object SparkEntry {
         |         ORDER BY c DESC, lang) AS rn FROM lc)
         |SELECT p.source, n_docs, n_tokens, n_langs, top_lang, top_lang_docs
         |FROM p JOIN t ON t.source = p.source AND t.rn = 1
-        |ORDER BY p.source""".stripMargin,
+        |ORDER BY p.source""".stripMargin),
     // qkg26: square counts — qkg16's wedge algebra + C(c,2) integer div
-    "qkg26_squares" -> KgOps.squaresOracle,
+    QuerySpec("qkg26_squares", KgOps.qkg26Squares, KgOps.squaresOracle),
     // qkg27: truncated Katz — integer path counts, dyadic damping
-    "qkg27_katz" -> KgOps.katzOracle,
+    QuerySpec("qkg27_katz", KgOps.qkg27Katz, KgOps.katzOracle),
     // qtx19: Heaps vocabulary growth — global token order via doc-table
     // cumulative offsets, per-term MIN first position, checkpoint counts
-    "qtx19_vocab_growth" ->
+    QuerySpec("qtx19_vocab_growth", DataOps.qtx19VocabGrowth,
       """WITH dl AS (SELECT doc_id,
         |        CAST(len(string_split(text, ' ')) AS BIGINT) AS n
         |      FROM documents),
@@ -1445,10 +1309,10 @@ object SparkEntry {
         |                        (10000), (20000), (50000))
         |SELECT n_tokens,
         |  (SELECT COUNT(*) FROM f WHERE first_pos <= cp.n_tokens) AS vocab
-        |FROM cp ORDER BY n_tokens""".stripMargin,
+        |FROM cp ORDER BY n_tokens""".stripMargin),
     // qtx13: df-driven token pruning — integer df thresholds (stop ≥ 30%
     // of docs, rare < 2), kept text pinned by md5 in original token order
-    "qtx13_df_prune" ->
+    QuerySpec("qtx13_df_prune", DataOps.qtx13DfPrune,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |toks AS (SELECT doc_id, r.i + 1 AS pos, ws[r.i + 1] AS term
         |         FROM t JOIN range(0, 100000) r(i) ON r.i < len(ws)
@@ -1469,12 +1333,12 @@ object SparkEntry {
         |  COUNT(*) FILTER (WHERE cls = 'rare') AS n_rare,
         |  md5(COALESCE(string_agg(term, ' ' ORDER BY pos)
         |        FILTER (WHERE cls = 'keep'), '')) AS kept_md5
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // qtx14: BM25 replayed — every input integer-exact, idf via the
     // ENGINE-PORTABLE polynomial ln (ExactMath; libm ln is not
     // bit-portable) as ln(2(N−df)+1) − ln(2df+1), per-doc term sum
     // folded in sorted term order (the qkg10 discipline)
-    "qtx14_bm25" ->
+    QuerySpec("qtx14_bm25", DataOps.qtx14Bm25,
       s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
          |             FROM documents),
          |dl AS (SELECT doc_id,
@@ -1514,11 +1378,11 @@ object SparkEntry {
         |           (a, b) -> a + b) AS score
         |       FROM part GROUP BY 1)
         |SELECT doc_id, score FROM sc
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
     // qtx15: bigram-LM score replayed — integer counts + V, the
     // ExactMath polynomial ln on numerator/denominator separately,
     // position-ordered fold, one division
-    "qtx15_lm_score" ->
+    QuerySpec("qtx15_lm_score", DataOps.qtx15LmScore,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |pr AS (SELECT doc_id, CAST(r.i AS BIGINT) AS pos,
          |         ws[r.i + 1] AS w1, ws[r.i + 2] AS w2
@@ -1548,10 +1412,10 @@ object SparkEntry {
          |          (a, b) -> a + b) AS sm
          |      FROM jl GROUP BY 1)
          |SELECT doc_id, n_pairs, sm / n_pairs AS lm_score FROM s
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // qtx16: skip-gram PPMI replayed — exact-position pair join,
     // integer count products through the ExactMath polynomial ln
-    "qtx16_skipgram_ppmi" ->
+    QuerySpec("qtx16_skipgram_ppmi", DataOps.qtx16SkipgramPpmi,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          |pr AS (SELECT doc_id, CAST(r.i AS BIGINT) AS p, ws[r.i + 1] AS w
          |       FROM t JOIN range(0, 100000) r(i) ON r.i < len(ws)),
@@ -1581,10 +1445,10 @@ object SparkEntry {
          |        - ${ExactMath.lnFromPartsSql("blb", "zb", "zb2")} AS ppmi
          |       FROM j2)
          |SELECT center, context, n_pair, ppmi FROM jl
-         |WHERE ppmi > CAST(0.0 AS DOUBLE) ORDER BY center, context""".stripMargin,
+         |WHERE ppmi > CAST(0.0 AS DOUBLE) ORDER BY center, context""".stripMargin),
     // qtx11: repetition signals — integer token/3-gram counts plus one
     // double division each; docs under 3 tokens get dup_ratio 0.0
-    "qtx11_repetition" ->
+    QuerySpec("qtx11_repetition", DataOps.qtx11Repetition,
       """WITH toks AS (
         | SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
@@ -1605,12 +1469,12 @@ object SparkEntry {
         | CASE WHEN COALESCE(d.n_grams, 0) > 0
         |      THEN CAST(d.n_dup_grams AS DOUBLE) / CAST(d.n_grams AS DOUBLE)
         |      ELSE CAST(0 AS DOUBLE) END AS dup_ratio
-        |FROM top t LEFT JOIN d USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM top t LEFT JOIN d USING (doc_id) ORDER BY doc_id""".stripMargin),
     // qtx12: inverted-index stats — positions are 1-based whitespace
     // ordinals (generate_subscripts zips with unnest); the posting
     // fingerprint is an ORDER-FREE sum of 32-bit md5 prefixes mod 2^62,
     // so both engines aggregate it without canonicalizing any list
-    "qtx12_postings" ->
+    QuerySpec("qtx12_postings", DataOps.qtx12Postings,
       """WITH tok AS (
         | SELECT doc_id, unnest(string_split(text, ' ')) AS term,
         |  generate_subscripts(string_split(text, ' '), 1) AS pos
@@ -1620,12 +1484,12 @@ object SparkEntry {
         | CAST(SUM(CAST(concat('0x', substring(md5(concat(
         |   CAST(doc_id AS VARCHAR), ':', CAST(pos AS VARCHAR))), 1, 8))
         |   AS BIGINT)) % 4611686018427387904 AS BIGINT) AS postings_fp
-        |FROM tok GROUP BY term ORDER BY term""".stripMargin,
+        |FROM tok GROUP BY term ORDER BY term""".stripMargin),
     // qsk1: HLL registers — bucket = first md5 byte, rank = 1 + leading
     // zero bits of the next 60 bits, all via integer/string arithmetic
     // (zero-hex-digit count * 4 + a first-digit CASE); sketch STATE is
     // exact even though the estimate it feeds is approximate
-    "qsk1_hll_registers" ->
+    QuerySpec("qsk1_hll_registers", DataOps.qsk1HllRegisters,
       """WITH p AS (SELECT
         |  CAST(concat('0x', substring(h, 1, 2)) AS BIGINT) AS bucket,
         |  ltrim(substring(h, 3, 15), '0') AS t
@@ -1637,11 +1501,11 @@ object SparkEntry {
         |   WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
         |   WHEN '7' THEN 1 ELSE 0 END + 1 AS BIGINT)) AS max_rank,
         | COUNT(*) AS n_keys
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
     // qtx10: the oracle recomputes both the planted messy URL and the
     // EXPECTED canonical form from doc_id arithmetic — the normalizer's
     // rules (fragment/case/port/utm/root-slash) are proved, not mirrored
-    "qtx10_url_canon" ->
+    QuerySpec("qtx10_url_canon", DataOps.qtx10UrlCanon,
       """WITH d0 AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents),
         |m AS (SELECT d,
         |  CASE WHEN d % 2 = 0 THEN 'HTTP' ELSE 'https' END AS scheme_m,
@@ -1663,29 +1527,29 @@ object SparkEntry {
         |    || (CASE WHEN d % 7 IN (0, 1) THEN '' ELSE '/P' || CAST(d AS VARCHAR) END)
         |    || (CASE WHEN d % 4 IN (0, 2) THEN '?id=' || CAST(d AS VARCHAR) ELSE '' END)
         |  AS url
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin),
     // 0x40000000 / 2^32 = 0.25: lexicographic hex compare, engine-portable
-    "qsp1_hash_sample" ->
+    QuerySpec("qsp1_hash_sample", DataOps.qsp1HashSample,
       """SELECT doc_id, lang FROM documents
         |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '40000000'
-        |ORDER BY doc_id""".stripMargin,
-    "qsp2_stratified" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("qsp2_stratified", DataOps.qsp2Stratified,
       """SELECT lang, doc_id, sample_rank FROM (
         | SELECT lang, doc_id,
         |  ROW_NUMBER() OVER (PARTITION BY lang
         |    ORDER BY md5(CAST(doc_id AS VARCHAR)), CAST(doc_id AS VARCHAR)) AS sample_rank
         | FROM documents) t
-        |WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin,
+        |WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin),
     // qsp3: per-stratum rate sampling — per-lang md5 thresholds
     // (floor(rate·2³²) as 8 hex digits; rate 1.0 keeps everything);
     // langs outside the mix spec are dropped (allowlist semantics)
-    "qsp3_mix_rates" ->
+    QuerySpec("qsp3_mix_rates", DataOps.qsp3MixRates,
       """SELECT doc_id, lang FROM documents
         |WHERE (lang = 'en' AND substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '80000000')
         |   OR (lang = 'de' AND substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '40000000')
         |   OR lang = 'es'
-        |ORDER BY doc_id""".stripMargin,
-    "qann1_topk" ->
+        |ORDER BY doc_id""".stripMargin),
+    QuerySpec("qann1_topk", DataOps.qann1TopK,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |        list_cosine_similarity(q.v, c.v) AS cos
@@ -1694,9 +1558,9 @@ object SparkEntry {
         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
         |      FROM s)
         |SELECT query_id, rank, neighbor_id FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
+        |ORDER BY query_id, rank""".stripMargin),
     // qann9: filtered search — the label predicate joins BEFORE ranking
-    "qann9_filtered_topk" ->
+    QuerySpec("qann9_filtered_topk", DataOps.qann9FilteredTopK,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
         |           FROM embeddings),
         |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1709,19 +1573,19 @@ object SparkEntry {
         |          ORDER BY cos DESC, neighbor_id) AS rank
         |      FROM s)
         |SELECT query_id, rank, neighbor_id, label FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-    "qann2_pairs_above" ->
+        |ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("qann2_pairs_above", DataOps.qann2PairsAbove,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
         |FROM e a JOIN e b ON a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.v, b.v) >= 0.42
-        |ORDER BY vec_a, vec_b""".stripMargin,
+        |ORDER BY vec_a, vec_b""".stripMargin),
     // The LSH structure is integer-LCG-derived (Knn.planeComp), so DuckDB
     // rebuilds planes, sign sketches and buckets exactly; dot products and
     // cosines accumulate left-to-right in double in both engines
     // (list_dot_product / list_cosine_similarity ≡ fvec_dot — verified
     // empirically, 2000 trials bit-identical).
-    "qann3_lsh_topk" ->
+    QuerySpec("qann3_lsh_topk", DataOps.qann3LshTopK,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |            len(embedding) AS d FROM embeddings),
         |pl AS (
@@ -1747,8 +1611,8 @@ object SparkEntry {
         |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
         |            JOIN e ne ON ne.vec_id = cand.vec_id)
         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "qann4_ivf_topk" ->
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("qann4_ivf_topk", DataOps.qann4IvfTopK,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 20 = 0),
         |ranked AS (
@@ -1769,10 +1633,10 @@ object SparkEntry {
         |  FROM cand JOIN e q ON q.vec_id = cand.query_id
         |            JOIN e n ON n.vec_id = cand.vec_id)
         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // qann6: PQ codes — sampled sub-codebooks, squared-L2 in double with
     // ascending-index accumulation on both engines, ties to smallest code
-    "qann6_pq_codes" ->
+    QuerySpec("qann6_pq_codes", DataOps.qann6PqCodes,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cb AS (SELECT vec_id AS code, v AS cv FROM e WHERE vec_id % 25 = 0),
         |sp AS (SELECT i AS sub FROM range(0, 4) t(i)),
@@ -1786,10 +1650,10 @@ object SparkEntry {
         |r AS (SELECT vec_id, sub, code, ROW_NUMBER() OVER (
         |        PARTITION BY vec_id, sub ORDER BY dist ASC, code) AS rn FROM d)
         |SELECT vec_id, CAST(sub AS BIGINT) AS sub, code FROM r WHERE rn = 1
-        |ORDER BY vec_id, sub""".stripMargin,
+        |ORDER BY vec_id, sub""".stripMargin),
     // qann7: ADC top-k — the qann6 code/distance CTEs reused; candidate
     // distance = subspace-ordered fold of the m table lookups
-    "qann7_adc_topk" ->
+    QuerySpec("qann7_adc_topk", DataOps.qann7AdcTopK,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cb AS (SELECT vec_id AS code, v AS cv FROM e WHERE vec_id % 25 = 0),
         |sp AS (SELECT i AS sub FROM range(0, 4) t(i)),
@@ -1817,9 +1681,9 @@ object SparkEntry {
         |       ROW_NUMBER() OVER (PARTITION BY query_id
         |         ORDER BY adc ASC, vec_id) AS rank FROM adc)
         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // qann8: IVF-PQ — qann4's cell/probe CTEs feeding qann7's ADC CTEs
-    "qann8_ivfpq" ->
+    QuerySpec("qann8_ivfpq", DataOps.qann8IvfPq,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 20 = 0),
         |ranked AS (
@@ -1860,8 +1724,8 @@ object SparkEntry {
         |       ROW_NUMBER() OVER (PARTITION BY query_id
         |         ORDER BY adc ASC, vec_id) AS rank FROM adc)
         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "qann5_embed_clusters" ->
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    QuerySpec("qann5_embed_clusters", DataOps.qann5EmbedClusters,
       """WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |pairs AS (SELECT a.vec_id AS pa, b.vec_id AS pb
         |          FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -1873,31 +1737,31 @@ object SparkEntry {
         |  UNION
         |  SELECT eg.w, lbl.l FROM lbl JOIN edges eg ON eg.u = lbl.n)
         |SELECT n AS vec_id, MIN(l) AS canonical FROM lbl
-        |GROUP BY n ORDER BY vec_id""".stripMargin,
+        |GROUP BY n ORDER BY vec_id""".stripMargin),
     // multimodal stub decode: payload = the document's UTF-8 bytes, so
     // every derived metadata value (length, md5, fake dims) is exact SQL
-    "qmm1_media_meta" ->
+    QuerySpec("qmm1_media_meta", DataOps.qmm1MediaMeta,
       """SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url,
         | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         | md5(text) AS content_hash,
         | CAST(160 + octet_length(encode(text)) % 480 AS INT) AS fake_width,
         | CAST(90 + (octet_length(encode(text)) // 7) % 270 AS INT) AS fake_height,
         | CAST(1 + octet_length(encode(text)) % 24 AS INT) AS fake_frames
-        |FROM documents ORDER BY url""".stripMargin,
+        |FROM documents ORDER BY url""".stripMargin),
     // qmm5: perceptual image near-dup — every dHash recomputed from the
     // pixel FORMULA (9×8 nearest-neighbor grid, adjacent-sample
     // comparisons, bit 63 via the signed min-long addend), banded 4×16
     // self-join, hamming via bit_count(xor). The Spark side decodes
     // real PNG bytes; any defilter/zlib/luma drift mismatches here.
-    "qmm5_image_neardup" ->
+    QuerySpec("qmm5_image_neardup", DataOps.qmm5ImageNearDup,
       s"""$imgPairsCte
         |SELECT a_id, b_id, CAST(bit_count(xor(ah, bh)) AS BIGINT) AS hamming
         |FROM pairs WHERE bit_count(xor(ah, bh)) <= 6
-        |ORDER BY a_id, b_id""".stripMargin,
+        |ORDER BY a_id, b_id""".stripMargin),
     // qmm6: image dedup clusters — connected components over the qmm5
     // pair graph (recursive min-label closure, the qdd3 pattern),
     // singletons mapping to themselves, min-id representative
-    "qmm6_image_clusters" ->
+    QuerySpec("qmm6_image_clusters", DataOps.qmm6ImageClusters,
       s"""${imgPairsCte.replaceFirst("^WITH ", "WITH RECURSIVE ")},
         |npairs AS (SELECT a_id AS doc_a, b_id AS doc_b FROM pairs
         |           WHERE bit_count(xor(ah, bh)) <= 6),
@@ -1913,11 +1777,11 @@ object SparkEntry {
         |SELECT cl.doc_id, cl.canonical, CAST(sz.n_imgs AS BIGINT) AS n_imgs,
         |  CAST(CASE WHEN cl.doc_id = cl.canonical THEN 1 ELSE 0 END
         |    AS BIGINT) AS is_rep
-        |FROM cl JOIN sz USING (canonical) ORDER BY doc_id""".stripMargin,
+        |FROM cl JOIN sz USING (canonical) ORDER BY doc_id""".stripMargin),
     // qmm4: the sniffing dispatcher — expected kind/format/meta per
     // doc_id%3 branch, recomputed arithmetically (image dims, wav
     // rate/duration, raw byte length)
-    "qmm4_media_dispatch" ->
+    QuerySpec("qmm4_media_dispatch", DataOps.qmm4MediaDispatch,
       """SELECT 'mixed://' || CAST(doc_id AS VARCHAR) AS url,
         | CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |      ELSE 'unknown' END AS kind,
@@ -1935,12 +1799,12 @@ object SparkEntry {
         |    * CAST(1000000 AS BIGINT))
         |    // (8000 * (1 + doc_id % 5) * ((1 + doc_id % 2) * (1 + doc_id % 3)))
         |  ELSE 0 END AS BIGINT) AS meta_b
-        |FROM documents ORDER BY url""".stripMargin,
+        |FROM documents ORDER BY url""".stripMargin),
     // qmm3: the Spark side PARSES real RIFF/WAV chunk headers; the
     // oracle recomputes every planted field from doc_id arithmetic
     // (duration = dataBytes·10⁶ div byteRate — the align factor cancels
     // exactly, so the spelled-out division equals n_samples·10⁶ div rate)
-    "qmm3_wav_meta" ->
+    QuerySpec("qmm3_wav_meta", DataOps.qmm3WavMeta,
       """SELECT 'wav://' || CAST(doc_id AS VARCHAR) AS url, 'wav' AS format,
         | CAST(1 + doc_id % 2 AS INT) AS channels,
         | CAST(8000 * (1 + doc_id % 5) AS INT) AS sample_rate,
@@ -1950,17 +1814,23 @@ object SparkEntry {
         |   * CAST(1000000 AS BIGINT))
         |   // (8000 * (1 + doc_id % 5) * ((1 + doc_id % 2) * (1 + doc_id % 3)))
         |   AS BIGINT) AS duration_us
-        |FROM documents ORDER BY url""".stripMargin,
+        |FROM documents ORDER BY url""".stripMargin),
     // qmm2: the Spark side PARSES real PNG/GIF/BMP/JPEG header bytes; the
     // oracle recomputes the planted dimensions from doc_id arithmetic.
-    "qmm2_image_dims" ->
+    QuerySpec("qmm2_image_dims", DataOps.qmm2ImageDims,
       """SELECT 'img://' || CAST(doc_id AS VARCHAR) AS url,
         | CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
         |      WHEN 2 THEN 'bmp' ELSE 'jpeg' END AS format,
         | CAST(100 + doc_id % 900 AS INT) AS width,
         | CAST(50 + doc_id % 500 AS INT) AS height
-        |FROM documents ORDER BY url""".stripMargin,
+        |FROM documents ORDER BY url""".stripMargin),
   )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.run).toMap
+
+  val oracleSql: Map[String, String] =
+    specs.map(s => s.name -> s.oracle).toMap
 
   /** qtx18 oracle: 3 unrolled BPE iterations. Each round recounts
     * adjacent symbol pairs (overlap-counting, frequency-weighted) over

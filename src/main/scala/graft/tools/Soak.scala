@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Graft
 import graft.kg.{Corpus, KgPipeline}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** sf1 soak harness — one order of magnitude of DIRECT scale evidence
   * above the driver's sf0.1 (the 100 TB claims should not rest on
@@ -22,7 +24,7 @@ import graft.kg.{Corpus, KgPipeline}
   *
   * Output: one JSON line. Correctness at sf1 is checked separately by
   * pointing `graft.Verify` + the DuckDB oracle at the scaled dir — the
-  * oracle SQL is scale-free, so the same 141-query gate applies.
+  * oracle SQL is scale-free, so the same gate applies.
   *
   * args: [srcSfDir] [outDir] [mult]
   */
@@ -44,16 +46,13 @@ object Soak {
     val tmp = s"$out/_tmp_$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val tmpDir = java.nio.file.Paths.get(tmp)
-    val part = java.nio.file.Files.list(tmpDir).iterator()
-    var moved = false
-    while (part.hasNext && !moved) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        java.nio.file.Files.move(p,
+    val moved = Using.resource(java.nio.file.Files.list(tmpDir)) { parts =>
+      parts.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => java.nio.file.Files.move(p,
           java.nio.file.Paths.get(s"$out/$name.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        moved = true
-      }
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+        .isDefined
     }
     require(moved, s"no parquet part written for $name")
     graft.snapshot.SnapshotTable.deleteTree(tmpDir)
