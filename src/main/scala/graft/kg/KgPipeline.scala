@@ -106,9 +106,9 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     java.nio.file.Files.writeString(f, sb.toString): Unit
   }
 
-  private def footerLineage(stage: String, t: SnapshotTable,
+  private def footerLineage(stage: String, counts: Seq[Long],
                             updateTag: Long): Seq[LineageRow] =
-    t.fileRowCounts(t.latestVersion.get).zipWithIndex.map { case (n, i) =>
+    counts.zipWithIndex.map { case (n, i) =>
       LineageRow(stage, i, updateTag, -1L, n)
     }
 
@@ -116,13 +116,12 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     .schema("stage STRING, partition_id INT, update_tag LONG, rows_in LONG, rows_out LONG")
     .json(s"$workRoot/lineage")
 
-  /** Run (or resume) one stage: compute, commit, lineage (footer-based
-    * rows for the committed output plus any extras). Wall time per stage
-    * goes to stderr (the statsd-timer analog,
-    * cartography/util.py:176-196).
+  /** Run (or resume) one stage: compute, commit, lineage (one footer
+    * pass; extras get the committed frame and its per-file counts). Wall
+    * time goes to stderr (statsd-timer analog, cartography/util.py:176-196).
     */
   private def stage(name: String, updateTag: Long,
-                    extraLineage: (DataFrame, SnapshotTable) => Seq[LineageRow] =
+                    extraLineage: (DataFrame, Seq[Long]) => Seq[LineageRow] =
                       (_, _) => Nil)
                    (compute: => DataFrame): DataFrame = {
     val t = stageTable(name)
@@ -130,9 +129,10 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     else {
       val t0 = System.nanoTime()
       val out = compute
-      t.commit(out, updateTag)
-      val committed = t.read()
-      writeLineage(footerLineage(name, t, updateTag) ++ extraLineage(committed, t))
+      val v = t.commit(out, updateTag)
+      val committed = t.readVersion(v)
+      val counts = t.fileRowCounts(v)
+      writeLineage(footerLineage(name, counts, updateTag) ++ extraLineage(committed, counts))
       System.err.println(f"[kg-timing] stage=$name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
       committed
     }
@@ -290,7 +290,7 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     selected.foreach {
       case "extract" =>
         stage("extract", updateTag,
-          (_, t) => footerLineage("pages", t, updateTag)) {
+          (_, counts) => footerLineage("pages", counts, updateTag)) {
           Extract.pageText(pagesIn.toDF().as[Page]).toDF()
         }: Unit
       case "facts" =>
@@ -336,11 +336,11 @@ final class KgPipeline(spark: SparkSession, workRoot: String,
     // deterministic or table-backed, and each stage below commits.
     val pagesDf = pagesIn.toDF()
 
-    // Input-cardinality lineage row ("pages") is derived from the
-    // committed extract output (1 row per page) rather than by
-    // re-scanning the raw input, and flushes with the extract row.
+    // Input-cardinality lineage rows ("pages") reuse the committed
+    // extract output's per-file counts (1 row per page): no re-scan of
+    // the raw input, no second footer pass.
     val textsDf = stage("extract", updateTag,
-      (_, t) => footerLineage("pages", t, updateTag)) {
+      (_, counts) => footerLineage("pages", counts, updateTag)) {
       Extract.pageText(pagesDf.as[Page]).toDF()
     }
 

@@ -264,6 +264,9 @@ object BinaryOps {
 
   // ---- real PNG pixel decode (dependency-free) ----------------------------
 
+  /** Largest image [[pngPixels]] decodes (4096², ≤ 64 MB of RGBA rows). */
+  val MaxPngPixels: Long = 1L << 24
+
   /** FULL PNG pixel decode with zero codec dependencies — chunk walk,
     * `java.util.zip.Inflater` for the zlib stream, and the five
     * standard scanline filters (None/Sub/Up/Average/Paeth) reversed
@@ -276,6 +279,8 @@ object BinaryOps {
     * perceptual hashing is engine-exact and oracle-recomputable. Chunk
     * CRCs are deliberately not validated — this is a decoder, not an
     * integrity audit, and at 10⁹ images per-chunk CRC32 is pure cost.
+    * Total on hostile input: chunk bounds are checked in Long, and an
+    * image over [[MaxPngPixels]] returns None before any allocation.
     */
   def pngPixels(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     def u8(i: Int) = b(i) & 0xff
@@ -289,7 +294,7 @@ object BinaryOps {
     var done = false
     while (!done && supported && i + 8 <= b.length) {
       val len = be32(i)
-      if (len < 0 || i + 12 + len > b.length) supported = false
+      if (len < 0 || i + 12L + len > b.length) supported = false
       else {
         val typ = new String(b, i + 4, 4, "US-ASCII")
         typ match {
@@ -311,7 +316,8 @@ object BinaryOps {
         i += 12 + len
       }
     }
-    if (!supported || w <= 0 || h <= 0 || idat.size() == 0) return None
+    if (!supported || w <= 0 || h <= 0 || idat.size() == 0 ||
+      w.toLong * h > MaxPngPixels) return None
     val bpp = colorType match { case 0 => 1; case 2 => 3; case _ => 4 }
     val stride = w * bpp
     val raw = new Array[Byte](h * (1 + stride))

@@ -2,8 +2,10 @@ package graft.snapshot
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.collection.parallel.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Hash-bucket sub-partitioning inside each logical partition:
   * physical partition value = `<logicalValue>~b<pmod(xxhash64(hashCols), n)>`.
@@ -41,8 +43,12 @@ final case class BucketSpec(hashCols: Seq[String], n: Int)
   * Layout:
   * {{{
   *   root/data/v{N}/{physicalValue}/part-*.parquet
-  *   root/_manifest/v{N}.json   // commit record + physical value -> data dir
+  *   root/_manifest/v{N}.json   // version, updateTag, buckets, schema, value -> dir
   * }}}
+  *
+  * The manifest records the commit's data-file `schema`, as Iceberg table
+  * metadata does: every read scans with it, so none starts an inference
+  * job. Row counts stay footer-derived, on demand ([[fileRowCounts]]).
   *
   * Bucketed tables keep the logical partition column in the data files
   * (readers get it for free in one multi-path scan); non-bucketed tables
@@ -103,25 +109,23 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * [[commitPhysical]].
     */
   def physicalValuesOf(df: DataFrame): Seq[String] = {
-    requireBucketsMatch()
+    requireBucketsMatch(latestVersion.map(manifest))
     df.select(physicalValue.as(pvCol)).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
-  /** Physical values of logical partition `value` in version `v`. */
-  private def physicalKeysOf(v: Long, logical: String): Seq[String] = {
-    val keys = partitionsOf(v).keys
+  /** Physical values of logical partition `logical` among `keys`. */
+  private def physicalKeysOf(keys: Iterable[String], logical: String): Seq[String] =
     bucket match {
       case None => keys.filter(_ == logical).toSeq
       case Some(_) => keys.filter(_.startsWith(logical + "~b")).toSeq
     }
-  }
 
   // ---- manifest (de)serialization: Jackson, not hand-rolled strings —
   // partition values are data-derived (dynamic rel labels), and an
   // unescaped quote/backslash in one would silently corrupt the manifest
   // and lose partitions on the next read.
-  private def writeManifest(v: Long, updateTag: Long,
+  private def writeManifest(v: Long, updateTag: Long, schema: StructType,
                             parts: Map[String, String]): Unit = {
     Files.createDirectories(manifestDir)
     val root = SnapshotTable.mapper.createObjectNode()
@@ -134,7 +138,8 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     // Unbucketed layouts record 0 (not nothing): an absent field must
     // mean ONLY "legacy manifest", or a bucketed open over an unbucketed
     // layout would pass the guard and silently miss every partition
-    root.put("buckets", bucket.map(_.n).getOrElse(0)): Unit
+    root.put("buckets", bucket.map(_.n).getOrElse(0))
+    root.replace("schema", SnapshotTable.mapper.readTree(schema.json))
     val p = root.putObject("partitions")
     parts.toSeq.sortBy(_._1).foreach { case (k, d) => p.put(k, d): Unit }
     val tmp = manifestDir.resolve(s".v$v.json.tmp")
@@ -142,28 +147,28 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     Files.move(tmp, manifestPath(v), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** physical partition value -> data dir (relative to root) for a version. */
-  def partitionsOf(v: Long): Map[String, String] = {
-    val root = SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-    val it = root.get("partitions").fields()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) {
-      val e = it.next()
-      b += e.getKey -> e.getValue.asText()
-    }
-    b.result()
+  /** Version `v`'s manifest, parsed once into one record. */
+  private def manifest(v: Long): SnapshotTable.Manifest = {
+    val m = SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
+    val schema = Option(m.get("schema")).getOrElse(sys.error(
+      s"snapshot table $root manifest v$v has no schema field"))
+    val parts = Map.newBuilder[String, String]
+    m.get("partitions").properties().forEach(e =>
+      parts += e.getKey -> e.getValue.asText())
+    SnapshotTable.Manifest(m.get("version").asLong(), m.get("updateTag").asLong(),
+      Option(m.get("buckets")).map(_.asInt()),
+      DataType.fromJson(schema.toString).asInstanceOf[StructType], parts.result())
   }
 
-  def updateTagOf(v: Long): Long =
-    SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-      .get("updateTag").asLong()
+  /** physical partition value -> data dir (relative to root) for a version. */
+  def partitionsOf(v: Long): Map[String, String] = manifest(v).partitions
+
+  def updateTagOf(v: Long): Long = manifest(v).updateTag
 
   /** Bucket count version `v` was committed with (0: unbucketed; None:
     * a legacy manifest that predates the record).
     */
-  def recordedBuckets(v: Long): Option[Int] =
-    Option(SnapshotTable.mapper.readTree(Files.readString(manifestPath(v)))
-      .get("buckets")).map(_.asInt())
+  def recordedBuckets(v: Long): Option[Int] = manifest(v).buckets
 
   /** Fail fast when this instance's bucket arithmetic disagrees with the
     * latest committed layout — guards every SCOPED path (pruned reads,
@@ -175,8 +180,8 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * (they follow manifest dirs, no arithmetic) and stay valid across a
     * re-bucket for time travel.
     */
-  private def requireBucketsMatch(): Unit =
-    latestVersion.flatMap(recordedBuckets).foreach { r =>
+  private def requireBucketsMatch(latest: Option[SnapshotTable.Manifest]): Unit =
+    latest.flatMap(_.buckets).foreach { r =>
       val mine = bucket.map(_.n).getOrElse(0)
       require(mine == r,
         s"snapshot table $root was laid out with $r buckets but this " +
@@ -188,15 +193,18 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
 
   // ---- reads -------------------------------------------------------------
 
-  private def readDirs(parts: Seq[(String, String)]): Option[DataFrame] = {
+  /** Scan data dirs under a recorded schema: no inference job. */
+  private def readDirs(schema: StructType,
+                       parts: Seq[(String, String)]): Option[DataFrame] = {
     if (parts.isEmpty) return None
+    val reader = spark.read.schema(schema)
     bucket match {
       case Some(_) =>
         // logical column lives in the data: one multi-path relation
-        Some(spark.read.parquet(parts.map { case (_, rel) => s"$root/$rel" }: _*))
+        Some(reader.parquet(parts.map { case (_, rel) => s"$root/$rel" }: _*))
       case None =>
         val dfs = parts.sortBy(_._1).map { case (value, rel) =>
-          val df = spark.read.parquet(s"$root/$rel")
+          val df = reader.parquet(s"$root/$rel")
           partitionCol match {
             case Some(c) => df.withColumn(c, lit(value))
             case None => df
@@ -206,10 +214,17 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     }
   }
 
+  /** Read the `keys` of manifest `m` that it lists. */
+  private def readKeys(m: SnapshotTable.Manifest,
+                       keys: Seq[String]): Option[DataFrame] =
+    readDirs(m.schema, keys.flatMap(k => m.partitions.get(k).map(k -> _)))
+
   /** Read one version (time travel). */
-  def readVersion(v: Long): DataFrame =
-    readDirs(partitionsOf(v).toSeq)
+  def readVersion(v: Long): DataFrame = {
+    val m = manifest(v)
+    readDirs(m.schema, m.partitions.toSeq)
       .getOrElse(sys.error(s"snapshot table $root version $v is empty"))
+  }
 
   /** Latest committed state. */
   def read(): DataFrame = readVersion(latestVersion.getOrElse(
@@ -219,9 +234,8 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * version — a pruned scan that never touches other partitions' files.
     */
   def readPartition(value: String): Option[DataFrame] =
-    latestVersion.flatMap { v =>
-      val parts = partitionsOf(v)
-      readDirs(physicalKeysOf(v, value).map(k => k -> parts(k)))
+    latestVersion.map(manifest).flatMap { m =>
+      readKeys(m, physicalKeysOf(m.partitions.keys, value))
     }
 
   /** Read only the given PHYSICAL partitions of the latest version;
@@ -229,10 +243,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * matches (caller supplies the empty frame).
     */
   def readPhysical(values: Seq[String]): Option[DataFrame] =
-    latestVersion.flatMap { v =>
-      val parts = partitionsOf(v)
-      readDirs(values.flatMap(k => parts.get(k).map(k -> _)))
-    }
+    latestVersion.map(manifest).flatMap(readKeys(_, values))
 
   /** Row-level changelog between two committed versions — the Iceberg
     * `create_changelog_view` / CDC-read analog: one row per key whose
@@ -252,13 +263,12 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * invariant).
     */
   def changelog(fromV: Long, toV: Long, keyCols: Seq[String]): DataFrame = {
-    val pa = partitionsOf(fromV)
-    val pb = partitionsOf(toV)
+    val ma = manifest(fromV)
+    val mb = manifest(toV)
+    val (pa, pb) = (ma.partitions, mb.partitions)
     val changed = (pa.keySet ++ pb.keySet)
       .filter(k => pa.get(k) != pb.get(k)).toSeq.sorted
-    def side(parts: Map[String, String]) =
-      readDirs(changed.flatMap(k => parts.get(k).map(k -> _)))
-    (side(pa), side(pb)) match {
+    (readKeys(ma, changed), readKeys(mb, changed)) match {
       case (Some(b), Some(a)) => SnapshotTable.diff(b, a, keyCols)
       case (Some(b), None) => SnapshotTable.diff(b, b.limit(0), keyCols)
       case (None, Some(a)) => SnapshotTable.diff(a.limit(0), a, keyCols)
@@ -275,12 +285,15 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
 
   private def writeData(df: DataFrame, v: Long, value: String): String = {
     val rel = s"data/v$v/$value"
-    val out = partitionCol match {
-      case Some(c) => df.drop(c)
-      case None => df
-    }
-    out.write.mode("overwrite").parquet(s"$root/$rel")
+    df.write.mode("overwrite").parquet(s"$root/$rel")
     rel
+  }
+
+  /** Schema of the data files a commit of `df` writes (an unbucketed
+    * partitioned layout keeps its partition column in the dir names). */
+  private def fileSchema(df: DataFrame): StructType = (partitionCol, bucket) match {
+    case (Some(c), None) => StructType(df.schema.filterNot(_.name == c))
+    case _ => df.schema
   }
 
   /** Decode Spark/Hive percent-escaped partition directory names. */
@@ -351,7 +364,7 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
       case Some(_) => writeDataPartitioned(df, v, values = None)
       case None => Map("all" -> writeData(df, v, "all"))
     }
-    writeManifest(v, updateTag, parts)
+    writeManifest(v, updateTag, fileSchema(df), parts)
     v
   }
 
@@ -360,38 +373,53 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
     * carried forward by reference (no data movement). This is the scale
     * path — for a bucketed table, `touched` is the bucket set a merge
     * batch actually hashes into.
+    *
+    * Carried files are read under the recorded schema, so a `df` whose
+    * field names or types differ fails here (order and nullability may
+    * differ); a full [[commit]] changes the schema.
     */
   def commitPhysical(df: DataFrame, updateTag: Long,
                      touched: Seq[String]): Long = {
     require(partitionCol.isDefined, "commitPhysical requires a partition column")
-    requireBucketsMatch()
-    val v = latestVersion.getOrElse(0L) + 1
-    val carried = latestVersion.map(partitionsOf).getOrElse(Map.empty) -- touched
+    val prev = latestVersion.map(manifest)
+    requireBucketsMatch(prev)
+    val schema = fileSchema(df)
+    prev.foreach { m =>
+      def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+      require(fields(schema) == fields(m.schema),
+        s"snapshot table $root: scoped commit schema ${schema.catalogString} " +
+          s"differs from the recorded ${m.schema.catalogString}; carried " +
+          "partitions would be read under the recorded one — use a full commit")
+    }
+    val v = prev.map(_.version).getOrElse(0L) + 1
+    val carried = prev.map(_.partitions).getOrElse(Map.empty) -- touched
     val fresh = writeDataPartitioned(df, v, Some(touched))
-    writeManifest(v, updateTag, carried ++ fresh)
+    writeManifest(v, updateTag, schema, carried ++ fresh)
     v
   }
 
   /** Per-file committed row counts of a version, straight from the
     * parquet footers — NO Spark job. Powers lineage rows and benchmark
     * page counts; a count() job on tiny committed tables costs more in
-    * scheduling than the data.
+    * scheduling than the data. One pass: each footer is read once, the
+    * files in parallel on the driver's cores; the result keeps
+    * (partition, file name) order.
     */
   def fileRowCounts(v: Long): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
-    partitionsOf(v).toSeq.sortBy(_._1).flatMap { case (_, rel) =>
+    val files = partitionsOf(v).toSeq.sortBy(_._1).flatMap { case (_, rel) =>
       val dir = Paths.get(root, rel)
       if (!Files.isDirectory(dir)) Seq.empty
       else listDir(dir)
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .sortBy(_.getFileName.toString)
-        .map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }
     }
+    files.par.map { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }.seq
   }
 
   /** Total committed rows of the latest version (footer-based, no job). */
@@ -533,8 +561,8 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
           // non-bucketed contract, where the isin filter did this)
           val fresh = physicalValuesOf(df)
             .filter(pv => touched.exists(t => pv.startsWith(t + "~b")))
-          val prev = latestVersion
-            .map(v => touched.flatMap(t => physicalKeysOf(v, t)))
+          val prev = latestVersion.map(partitionsOf)
+            .map(parts => touched.flatMap(physicalKeysOf(parts.keys, _)))
             .getOrElse(Seq.empty)
           commitPhysical(df, updateTag, (fresh ++ prev).distinct.sorted)
         } finally df.unpersist()
@@ -544,6 +572,11 @@ final class SnapshotTable(val spark: SparkSession, val root: String,
 
 object SnapshotTable {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** One committed version's manifest (`buckets` None: a manifest that
+    * predates the bucket record; `partitions`: physical value -> data dir). */
+  private[snapshot] final case class Manifest(version: Long, updateTag: Long,
+    buckets: Option[Int], schema: StructType, partitions: Map[String, String])
 
   /** Key-wise row diff of two same-schema frames: op ∈ insert (key only
     * in `after`) / delete (only in `before`) / update (present in both

@@ -202,5 +202,11 @@ class KgSpec extends SparkSpecBase {
     val stages = pipe.lineageRows().select("stage").distinct()
       .collect().map(_.getString(0)).toSet
     assert(Set("pages", "extract", "links", "canonical", "triples").subsetOf(stages))
+    // "pages" rows are the extract rows relabelled (one footer pass),
+    // one row per page in total
+    def rowsOf(stage: String) = pipe.lineageRows().filter(col("stage") === stage)
+      .select("partition_id", "rows_out").as[(Int, Long)].collect().sorted.toSeq
+    assert(rowsOf("pages") === rowsOf("extract"))
+    assert(rowsOf("pages").map(_._2).sum === 500L)
   }
 }

@@ -75,6 +75,47 @@ class PngPixelSpec extends SparkSpecBase {
     assert(BinaryOps.pngPixels(deep).isEmpty)
   }
 
+  test("hostile length fields return None and never throw") {
+    def be32(n: Int) = Array((n >>> 24).toByte, (n >>> 16).toByte,
+      (n >>> 8).toByte, n.toByte)
+    // a chunk whose declared length need not match its data; CRC is zero
+    def chunk(typ: String, len: Int, data: Array[Byte]) =
+      be32(len) ++ typ.getBytes("US-ASCII") ++ data ++ be32(0)
+    def ihdr(w: Int, h: Int, colorType: Int) = {
+      val d = be32(w) ++ be32(h) ++ Array[Byte](8, colorType.toByte, 0, 0, 0)
+      chunk("IHDR", d.length, d)
+    }
+    val sig = DataOps.pngBytes(0L).take(8)
+    val z = {
+      val d = new java.util.zip.Deflater()
+      d.setInput(new Array[Byte](8 * 9)); d.finish() // 8 rows of 1 + 8 zero bytes
+      val buf = new Array[Byte](256)
+      buf.take(d.deflate(buf))
+    }
+    val idat = chunk("IDAT", z.length, z)
+    val iend = chunk("IEND", 0, Array.emptyByteArray)
+    val hostile = Seq(
+      // chunk lengths near 2^31: the end offset overflows Int
+      "IDAT length 2^31-8" -> (sig ++ ihdr(4, 4, 0) ++ chunk("IDAT", 0x7ffffff8, z) ++ iend),
+      "tEXt length 2^31-16" -> (sig ++ ihdr(4, 4, 0) ++ chunk("tEXt", 0x7ffffff0, z) ++ idat ++ iend),
+      "IHDR length 2^31-1" -> (sig ++ chunk("IHDR", 0x7fffffff, new Array[Byte](13)) ++ idat ++ iend),
+      // w * bpp and h * (1 + stride) overflow Int
+      "RGB width 2^30" -> (sig ++ ihdr(1 << 30, 1, 2) ++ idat ++ iend),
+      "RGBA 2^16 x 2^16" -> (sig ++ ihdr(1 << 16, 1 << 16, 6) ++ idat ++ iend),
+      // no overflow, but a multi-gigabyte claim
+      "gray 40000 x 40000" -> (sig ++ ihdr(40000, 40000, 0) ++ idat ++ iend),
+      "gray width 2^31-1" -> (sig ++ ihdr(Int.MaxValue, 1, 0) ++ idat ++ iend))
+    for ((what, bytes) <- hostile) {
+      val got = try BinaryOps.pngPixels(bytes) catch {
+        case t: Throwable => fail(s"$what threw $t")
+      }
+      assert(got.isEmpty, what)
+    }
+    // control: the same chunks with honest lengths decode
+    assert(BinaryOps.pngPixels(sig ++ ihdr(8, 8, 0) ++ idat ++ iend)
+      .exists { case (w, h, g) => w == 8 && h == 8 && g.forall(_ == 0) })
+  }
+
   test("dHash: planted near-copies land within hamming 6; unrelated images are far") {
     def hashOf(id: Long): Long = {
       val Some((w, h, g)) = BinaryOps.pngPixels(DataOps.pngBytes(id))

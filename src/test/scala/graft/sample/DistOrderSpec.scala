@@ -25,6 +25,19 @@ class DistOrderSpec extends SparkSpecBase {
     assert(got === expect)
   }
 
+  test("prefixSum rejects a fractional value column instead of truncating it") {
+    val df = (1 to 20).map(i => (i.toLong, 0.5)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      DistOrder.prefixSum(df, col("k"), col("k"), col("v"), "off", nShards = 4)
+    }
+    assert(e.getMessage.contains("integral") && e.getMessage.contains("double"),
+      e.getMessage)
+    // an int column (as TextStats passes) still sums exactly
+    val ints = (1 to 20).map(i => (i.toLong, i % 3)).toDF("k", "v")
+    assert(DistOrder.prefixSum(ints, col("k"), col("k"), col("v"), "off",
+      nShards = 4).agg(max("off")).head().getLong(0) === (1 to 19).map(_ % 3).sum)
+  }
+
   test("rankBy + ntileFromRank equals ntile().over(global window), asc and desc, with ties") {
     // heavy ties: metric = i % 7 so every shard boundary lands on ties
     val df = (1 to 300).map(i => ((i % 7).toLong, s"u$i")).toDF("m", "u")
